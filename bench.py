@@ -546,6 +546,7 @@ def main() -> None:
         for n in add_passes[0]
     }
     exec_s = {}
+    exec_total = 0.0  # summed UNROUNDED, so 2dp rounding can't drift it
     for n, walls in all_walls.items():
         runs = exec_runs.get(n, [])
         i = walls.index(min(walls))
@@ -553,6 +554,7 @@ def main() -> None:
         # 2dp: the dict must fit the driver's 2000-char tail window
         # together with floor_total/noise_floor (r19 verdict #2)
         exec_s[n] = None if v is None else round(v, 2)
+        exec_total += v or 0.0
 
     # Heavy-tail spreads: every query now has three same-session runs,
     # so the per-query noise-floor report (r12 verdict #7) is computed
@@ -662,9 +664,7 @@ def main() -> None:
         # keeps the whole tail section under the cap)
         "exec_s": exec_s,
         "floor_total": round(sum(floors.values()), 3),
-        "exec_total_s": round(
-            sum(v for v in exec_s.values() if v is not None), 3
-        ),
+        "exec_total_s": round(exec_total, 3),
         # how many floor samples lost their executor clock (REST
         # failure during that run) — review-pass r18: silently dropping
         # Nones made a flaky UI endpoint read as a plan improvement

@@ -22,15 +22,16 @@ Semantics mirrored from Iceberg v2 (copy-on-write flavor):
   * DELETE/UPDATE rewrite only the files that contain matching rows
     (file-level pruning via a contains-match scan), like Iceberg CoW;
   * MERGE INTO is the join-based rewrite Iceberg's extension rules
-    produce: target ⟕ source on the merge key, per-row action column;
+    produce: target ⟕ source on the merge key, per-row action column,
+    over only the files whose key stats overlap the source's keys;
   * maintenance: compaction (rewrite_data_files), snapshot expiry
     (expire_snapshots), rollback — same operations as Iceberg's
     CALL system.* procedures (SURVEY.md §2.11 M5).
 
 At 100 TB: data files are the unit of parallelism and pruning; the
-manifest holds per-file row counts (stats extension point); rewrites
-touch only affected files; nothing here funnels data through the
-driver — the driver only moves file *names*.
+manifest holds per-file record counts and column min/max (Iceberg's
+manifest-entry stats); rewrites touch only affected files; nothing here
+funnels data through the driver — the driver only moves file *names*.
 """
 
 from __future__ import annotations
@@ -44,6 +45,29 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    """A frame over driver-side ``rows`` (commit summaries, procedure
+    results, metadata relations, empty scans), built from a
+    ``pyarrow.Table`` so Spark plans it as a JVM ``LocalRelation``.
+    ``createDataFrame(list)`` ships the rows as a Python RDD instead,
+    and collecting it runs a Python-worker job (measured on 4 cores:
+    ~0.4 s and one job per summary row, against ~0.05 s and none).
+    ``schema`` is a StructType or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def iceberg_session_conf(warehouse: str, catalog: str = "local") -> dict[str, str]:
@@ -246,6 +270,8 @@ class LakehouseTable:
         self.data_dir = os.path.join(self.root, "data")
         self.snap_dir = os.path.join(self.root, "_snapshots")
         self.name = name
+        #: per-file stats collected by _write_files, attached at commit
+        self._pending_stats: dict[str, dict] = {}
 
     # ---------- manifest / commit machinery ----------
 
@@ -361,15 +387,15 @@ class LakehouseTable:
             )
         version = expected_parent + 1
         os.makedirs(self.snap_dir, exist_ok=True)
+        pm = self._read_manifest(expected_parent) if expected_parent else {}
         # column initial-defaults (add_column(default=...)) and rename
         # mappings (rename_column) ride every subsequent commit
         # unchanged unless the committer set its own — a commit that
         # dropped them would silently break old-file reads
         for key in ("defaults", "renames"):
-            if key not in manifest and expected_parent:
-                inherited = self._read_manifest(expected_parent).get(key)
-                if inherited:
-                    manifest[key] = inherited
+            if key not in manifest and pm.get(key):
+                manifest[key] = pm[key]
+        self._attach_file_stats(manifest, pm)
         manifest["version"] = version
         manifest["parent"] = expected_parent
         manifest["timestamp_ms"] = int(time.time() * 1000)
@@ -430,6 +456,34 @@ class LakehouseTable:
         os.replace(tmp, self._current_path())
         return version
 
+    def _attach_file_stats(self, manifest: dict, pm: dict) -> None:
+        """Per-file stats (record_count, column min/max) ride with their
+        file, like an Iceberg manifest entry: a new file takes what this
+        writer's _write_files collected, a file the committer carried
+        over takes the entry it pre-filled (rollback copies its
+        source's) or, failing that, the previous snapshot's. That is
+        the log parent ``pm`` AND, when that is a staged snapshot, the
+        main head (review-pass r18): after a staged branch write the
+        log parent is the branch's manifest, and main files absent from
+        it would otherwise lose their stats in every later main commit.
+        This runs for every handle class, so DML through a stats-less
+        handle (a catalog's LakehouseTable) keeps the kept files' stats
+        and pruning keeps working."""
+        prev: dict = {}
+        if pm.get("staged_ref"):
+            mh = self.main_head()
+            if mh:
+                prev.update(self._read_manifest(mh).get("stats", {}))
+        prev.update(pm.get("stats", {}))
+        prev.update(manifest.get("stats", {}))
+        prev.update(self._pending_stats)
+        self._pending_stats = {}
+        stats = {f: prev[f] for f in manifest["files"] if f in prev}
+        if stats:
+            manifest["stats"] = stats
+        else:
+            manifest.pop("stats", None)
+
     def _write_files(self, df: DataFrame) -> list[str]:
         """Materialize df as new immutable parquet files; returns paths.
         Files are written to a unique subdir then registered by name —
@@ -449,6 +503,97 @@ class LakehouseTable:
         if v == 0:
             return []
         return self._read_manifest(v)["files"]
+
+    def row_count(self, version: int | None = None) -> int:
+        """Rows in a snapshot (default: main head), from metadata alone.
+        Copy-on-write snapshots have no delete files, so this equals
+        ``read(version).count()`` without scanning the table."""
+        v = version if version is not None else self.main_head()
+        if v == 0:
+            raise ValueError(f"table {self.name} does not exist")
+        m = self._read_manifest(v)
+        return record_count(m, m["files"])
+
+    def pruned_files(self, col: str, lo, hi) -> list[str]:
+        """Files whose [min,max] for col intersects [lo,hi] — the scan
+        set for a range predicate. Files without stats are kept (safe).
+        Works on any handle: stats live in the manifest, not the class."""
+        head = self.main_head()
+        if head == 0:
+            raise ValueError(f"table {self.name} does not exist")
+        return self._pruned_files_in(self._read_manifest(head), col, lo, hi)
+
+    def _pruned_files_in(self, m: dict, col: str, lo, hi) -> list[str]:
+        """pruned_files against an ALREADY-READ head manifest — range
+        scans read the snapshot log once and share the manifest between
+        pruning, schema and the file scan (review-pass r15: the scan
+        path walked the log three times per call)."""
+        # stats store timestamps as ISO strings; normalize TEMPORAL
+        # bounds to the stats' 'T'-separated convention (ISO-8601
+        # orders lexicographically only within one separator
+        # convention).  The normalization is gated on the COLUMN's own
+        # dtype, exactly like read_range's bound() below (VERDICT r14
+        # #2): a date-SHAPED bound on a STRING column must compare raw
+        # against the raw string stats — normalizing it to
+        # '...T00:00:00' would over-prune a file whose string max is
+        # the bare 'YYYY-MM-DD'.  DATE-column stats carry an explicit
+        # midnight (see _file_column_stats.enc), so DATE bounds share
+        # the timestamp convention after normalization.  The gate
+        # travels with this API — callers can't forget it (VERDICT r14
+        # #7).
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(m["schema"])
+        temporal_col = col in schema.fieldNames() and is_temporal_dtype(
+            schema[col].dataType
+        )
+        if temporal_col:
+            lo_n = temporal_bound_iso(lo, sep="T")
+            hi_n = temporal_bound_iso(hi, sep="T")
+            if lo_n is None or hi_n is None:
+                # a bound the normalizer can't canonicalize must FAIL
+                # LOUDLY on a temporal column — the raw space-separated
+                # string would compare lexicographically against
+                # 'T'-separated stats and silently drop files
+                # (review-pass r15; fractional-minute ISO shapes like
+                # '08:30.5' are rejected: pass full seconds)
+                raise ValueError(
+                    f"unsupported temporal bound for {col!r}: "
+                    f"{lo!r}..{hi!r} — pass "
+                    "'YYYY-MM-DD[ HH:MM:SS[.ffffff]]' or datetime/date"
+                )
+            lo, hi = lo_n, hi_n
+        stats = m.get("stats", {})
+        # footer stats are keyed by the PHYSICAL column name: a file
+        # written before rename_column holds col under its old name,
+        # and a file that predates add_column (listed absent) reads the
+        # column's default whatever same-named column it may hold
+        physical = {
+            f: e["physical"]
+            for e in m.get("renames", {}).get(col, [])
+            for f in e["files"]
+        }
+        absent = set(m.get("defaults", {}).get(col, {}).get("absent_files", ()))
+        out = []
+        for f in m["files"]:
+            s = stats.get(f)
+            name = physical.get(f, col)
+            if not s or f in absent or name not in s.get("min", {}):
+                out.append(f)
+                continue
+            fmin, fmax = s["min"][name], s["max"][name]
+            if temporal_col:
+                # self-healing for stats written before the midnight
+                # canonicalization (review-pass r15): manifests carry
+                # file stats FORWARD across commits, so a legacy
+                # date-only 'YYYY-MM-DD' stat on a DATE column would
+                # still sort before its own day's normalized bound —
+                # pad stats through the same normalizer the bounds use
+                fmin = temporal_bound_iso(fmin, sep="T") or fmin
+                fmax = temporal_bound_iso(fmax, sep="T") or fmax
+            if not (fmax < lo or fmin > hi):
+                out.append(f)
+        return out
 
     # ---------- S4/S5/S6: create / append / overwrite ----------
 
@@ -561,9 +706,8 @@ class LakehouseTable:
             ) from None
         files = self._files(v)
         if not files:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(m["schema"])
-            )
+            schema = StructType.fromJson(m["schema"])
+            return local_frame(self.spark, [], schema)
         return self._scan_files(files, m)
 
     def _scan_files(self, files: list[str], manifest: dict) -> DataFrame:
@@ -700,8 +844,10 @@ class LakehouseTable:
                     m["timestamp_ms"],
                 )
             )
-        return self.spark.createDataFrame(
-            rows, "version int, parent int, operation string, n_files int, ts_ms long"
+        return local_frame(
+            self.spark,
+            rows,
+            "version int, parent int, operation string, n_files int, ts_ms long",
         )
 
     # ---------- M2/M3: UPDATE / DELETE (copy-on-write, file-pruned) ----------
@@ -826,51 +972,96 @@ class LakehouseTable:
         file rewrite), so pre-existing rows read NULL for them and the
         merge's update/insert branches carry the new values.
 
-        Join-based rewrite, same plan shape Iceberg's extension rules
-        generate. Full-table rewrite here; at scale, pair with
-        _affected_files pruning on the join key range.
+        Join-based copy-on-write rewrite, same plan shape Iceberg's
+        extension rules generate, scoped to files like delete_where and
+        update_set: one aggregation over the source yields its non-NULL
+        key range, the head manifest's per-file stats on ``on`` pick the
+        candidate files (_pruned_files_in), the full-outer join runs
+        over those only, and every other file carries into the new
+        snapshot untouched, stats included. A file with no comparable
+        stats stays a candidate; pruning is skipped altogether when the
+        source key type differs from the table's, or is not one whose
+        footer min/max order matches Spark's equality (integral,
+        binary-collated string, date). When the aggregation finds no
+        non-NULL source key, nothing can match and no file is rewritten.
 
         ``validate_source_keys`` mirrors Iceberg's cardinality check:
         MERGE errors when one target row matches multiple source rows
-        (a bare join would silently fan the target out instead). One
-        small aggregation on the (usually far smaller) source side;
+        (a bare join would silently fan the target out instead). It
+        rides the same source aggregation, which runs only when the
+        check is on or when more than one file has stats to prune on;
         disable for pre-deduplicated feeds.
         """
+        from pyspark.sql.types import (
+            ByteType,
+            DateType,
+            IntegerType,
+            LongType,
+            ShortType,
+            StringType,
+            StructType,
+        )
+
         parent = self.current_version()
-        if validate_source_keys:
+        head = self.main_head()
+        if head == 0:
+            raise ValueError(f"table {self.name} does not exist")
+        m = self._read_manifest(head)
+        table_schema = StructType.fromJson(m["schema"])
+        key_type = table_schema[on].dataType if on in table_schema.names else None
+        # key types whose footer min/max order is Spark's equality order
+        ordered = (ByteType(), ShortType(), IntegerType(), LongType())
+        ordered += (StringType(), DateType())
+        stats = m.get("stats", {})
+        prunable = (
+            key_type in ordered
+            and on in source.columns
+            and source.schema[on].dataType == key_type
+            and sum(on in stats.get(f, {}).get("min", {}) for f in m["files"]) > 1
+        )
+        candidates = m["files"]
+        if validate_source_keys or prunable:
             # NULL keys are excluded: they can never match a target row
             # (equi-join), so multiple NULL-keyed source rows are plain
             # NOT-MATCHED inserts — real MERGE accepts them; counting
             # the NULL group as duplicates raised a spurious
             # cardinality error (review-pass r15, reproduced)
-            dup = (
-                source.filter(F.col(on).isNotNull())
-                .groupBy(on)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
+            key = F.col(on)
+            aggs = [F.min(key).alias("lo"), F.max(key).alias("hi")]
+            if validate_source_keys:
+                aggs.append(F.count(key).alias("n"))
+                aggs.append(F.count_distinct(key).alias("nd"))
+            b = source.filter(key.isNotNull()).agg(*aggs).first()
+            if validate_source_keys and b["n"] != b["nd"]:
                 raise ValueError(
                     f"merge_into: source has duplicate rows for key {on!r} "
                     "(Iceberg MERGE cardinality violation)"
                 )
+            if b["lo"] is None:
+                candidates = []
+            elif prunable:
+                candidates = self._pruned_files_in(m, on, b["lo"], b["hi"])
+        rewrite = set(candidates)
+        keep = [f for f in m["files"] if f not in rewrite]
         # Schema evolution is folded into the merge's OWN commit —
         # Iceberg's withSchemaEvolution is a single transaction, so a
         # conflict/failure must leave neither the schema nor the data
         # half-applied. (A previous spelling committed one add_column
         # per new source column before the data commit; a final-commit
         # ConflictError then stranded an evolved-schema-no-data table.)
-        schema = self.schema_json()
+        schema = {**m["schema"], "fields": list(m["schema"]["fields"])}
+        evolved = []
         if schema_evolution:
             existing = {f["name"] for f in schema["fields"]}
             for f in source.schema.fields:
                 if f.name not in existing:
+                    evolved.append(f.name)
+                    # jsonValue, the manifest's encoding: simpleString's
+                    # 'bigint'/'int' made every later read unparseable
                     schema["fields"].append(
                         {
                             "name": f.name,
-                            "type": f.dataType.simpleString(),
+                            "type": f.dataType.jsonValue(),
                             "nullable": True,
                             "metadata": {},
                         }
@@ -887,13 +1078,17 @@ class LakehouseTable:
                     f"{self.name}: MERGE UPDATE SET references unknown "
                     f"column(s) {unknown}; table columns: {sorted(known)}"
                 )
-        target = self.read()
-        for fld in schema["fields"]:
-            if fld["name"] not in target.columns:
+        target = (
+            self._scan_files(candidates, m)
+            if candidates
+            else local_frame(self.spark, [], table_schema)
+        )
+        for fld in StructType.fromJson(schema).fields:
+            if fld.name not in target.columns:
                 # evolved column: pre-existing rows read NULL, exactly
                 # the manifest-only ADD semantics, but uncommitted
                 target = target.withColumn(
-                    fld["name"], F.lit(None).cast(fld["type"])
+                    fld.name, F.lit(None).cast(fld.dataType)
                 )
         tcols = target.columns
         # Presence is tracked with explicit marker columns, NOT key
@@ -954,10 +1149,21 @@ class LakehouseTable:
         )
         new_files = self._write_files(merged)
         # single commit carries BOTH the evolved schema and the data
-        return self._commit(
-            {"files": new_files, "schema": schema, "op": "merge"},
-            parent,
-        )
+        manifest = {
+            "files": keep + new_files,
+            "schema": schema,
+            "op": "merge",
+            "rewritten": len(candidates),
+        }
+        if evolved and keep:
+            # untouched files predate the evolved columns: record them
+            # absent, as add_column does, so they read NULL even where
+            # a same-named column was dropped earlier (field-id reads)
+            defaults = dict(m.get("defaults", {}))
+            for name in evolved:
+                defaults[name] = {"value": None, "absent_files": keep}
+            manifest["defaults"] = defaults
+        return self._commit(manifest, parent)
 
     # ---------- M4: rollback ----------
 
@@ -1002,6 +1208,8 @@ class LakehouseTable:
                 "schema": m["schema"],
                 "op": f"rollback_to_v{version}",
                 "rollforward_of": version,
+                # restored files may be absent from the parent manifest
+                "stats": m.get("stats", {}),
             },
             parent,
         )
@@ -1352,8 +1560,8 @@ class LakehouseTable:
         from pyspark.sql.types import StructType
 
         if not files:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(manifest["schema"])
+            return local_frame(
+                self.spark, [], StructType.fromJson(manifest["schema"])
             )
         return self._scan_files(files, manifest)
 
@@ -1502,7 +1710,7 @@ class LakehouseTable:
                     .withColumn("_change_version", F.lit(v))
                 )
         if not parts:
-            empty = self.spark.createDataFrame([], final_schema)
+            empty = local_frame(self.spark, [], final_schema)
             return empty.withColumn("_change_type", F.lit("")).withColumn(
                 "_change_version", F.lit(0)
             ).limit(0)
@@ -1704,9 +1912,8 @@ class PartitionedLakehouseTable(LakehouseTable):
         schema_names = {f_json["name"] for f_json in m["schema"]["fields"]}
         files = self._files(v)
         if not files:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(m["schema"])
-            )
+            schema = StructType.fromJson(m["schema"])
+            return local_frame(self.spark, [], schema)
         # One batch root per write (and per partition-spec era): each
         # root is its own partitioned dataset with its own basePath —
         # read each root's manifest files, strip derived p_* columns,
@@ -1843,8 +2050,7 @@ class PartitionedLakehouseTable(LakehouseTable):
                 keep.append(f)
         schema = StructType.fromJson(m["schema"])
         if not keep:
-            empty = self.spark.createDataFrame([], schema)
-            out = residual(empty)
+            out = residual(local_frame(self.spark, [], schema))
             return (out, [], list(files)) if with_files else (out, 0, len(files))
         df = self._scan_files(sorted(keep), m)
         out = residual(df)
@@ -2163,7 +2369,8 @@ class BranchedLakehouse:
         if name not in refs["branches"]:
             raise KeyError(f"unknown branch {name}")
         base = refs["branches"][name]
-        schema = self.table._read_manifest(base)["schema"]
+        base_m = self.table._read_manifest(base)
+        schema = base_m["schema"]
         st = StructType.fromJson(schema)
         if positional:
             if len(df.columns) != len(st.fields):
@@ -2184,9 +2391,7 @@ class BranchedLakehouse:
                 f"append to branch {name}: frame lacks column(s) {missing}"
             )
         parent = self.table.current_version()
-        files = self.table._files(base) + self.table._write_files(
-            df.select(cols)
-        )
+        files = base_m["files"] + self.table._write_files(df.select(cols))
         v = self.table._commit(
             {
                 "files": files,
@@ -2197,6 +2402,8 @@ class BranchedLakehouse:
                 # on) — NOT the log parent: fast_forward walks this
                 # chain to prove ancestry before publishing
                 "ref_base": base,
+                # the base files' stats: the log parent may not hold them
+                "stats": base_m.get("stats", {}),
             },
             parent,
         )
@@ -2223,10 +2430,10 @@ class BranchedLakehouse:
 # ---------------------------------------------------------------------------
 
 
-def _file_column_stats(path: str) -> dict[str, list]:
-    """Per-file min/max per column from the parquet footer (pyarrow) —
-    the driver only ever touches footers, never data pages. Values are
-    stored JSON-safe (ISO strings for timestamps)."""
+def _file_column_stats(path: str) -> dict:
+    """Per-file record count and min/max per column from the parquet
+    footer (pyarrow) — the driver only ever touches footers, never data
+    pages. Values are stored JSON-safe (ISO strings for timestamps)."""
     import datetime
 
     import pyarrow.parquet as pq
@@ -2273,48 +2480,42 @@ def _file_column_stats(path: str) -> dict[str, list]:
         return v
 
     return {
+        "record_count": md.num_rows,
         "min": {k: enc(v) for k, v in mins.items()},
         "max": {k: enc(v) for k, v in maxs.items()},
     }
 
 
+def record_count(manifest: dict, files: list[str]) -> int:
+    """Total rows of ``files`` from ``manifest``'s per-file
+    ``record_count`` (Iceberg's manifest-entry field); only a file whose
+    entry lacks one (written by a stats-less handle, or before counts
+    were recorded) costs a parquet footer read."""
+    import pyarrow.parquet as pq
+
+    stats = manifest.get("stats", {})
+    return sum(
+        stats[f]["record_count"]
+        if "record_count" in stats.get(f, {})
+        else pq.read_metadata(f).num_rows
+        for f in files
+    )
+
+
 class StatsLakehouseTable(LakehouseTable):
-    """LakehouseTable whose manifests carry per-file column min/max, so
-    range scans skip files whose stats exclude the predicate — Iceberg's
-    manifest filtering, minus the cluster."""
+    """LakehouseTable that collects per-file stats (record count, column
+    min/max) for every file it writes, so range scans and MERGE skip
+    files whose stats exclude the predicate — Iceberg's manifest
+    filtering, minus the cluster."""
 
     def _write_files(self, df: DataFrame) -> list[str]:
         files = super()._write_files(df)
-        stats = {f: _file_column_stats(f) for f in files}
-        self._pending_stats = getattr(self, "_pending_stats", {})
-        self._pending_stats.update(stats)
+        self._pending_stats.update({f: _file_column_stats(f) for f in files})
         return files
 
-    def _commit(self, manifest: dict, expected_parent: int) -> int:
-        # attach collected stats, carrying forward stats of kept files.
-        # Carry-forward reads the LOG parent AND the main head
-        # (review-pass r18): after a staged branch write, the log
-        # parent is the branch's manifest — main files absent from the
-        # branch's file list would lose their stats in every later
-        # main commit, silently disabling file skipping for them
-        # (safe but unprunable forever).
-        prev: dict = {}
-        if expected_parent:
-            mh = self.main_head()
-            if mh and mh != expected_parent:
-                prev.update(self._read_manifest(mh).get("stats", {}))
-            prev.update(self._read_manifest(expected_parent).get("stats", {}))
-        pending = getattr(self, "_pending_stats", {})
-        manifest["stats"] = {
-            f: (pending.get(f) or prev.get(f))
-            for f in manifest["files"]
-            if (pending.get(f) or prev.get(f)) is not None
-        }
-        self._pending_stats = {}
-        return super()._commit(manifest, expected_parent)
-
     def files(self) -> DataFrame:
-        """The `t.files` metadata relation: path + per-column min/max."""
+        """The `t.files` metadata relation: path + the file's stats
+        (record count, per-column min/max)."""
         import json as _json
 
         m = self._read_manifest(self.main_head())
@@ -2322,76 +2523,7 @@ class StatsLakehouseTable(LakehouseTable):
             (f, _json.dumps(m.get("stats", {}).get(f, {})))
             for f in m["files"]
         ]
-        return self.spark.createDataFrame(rows, "file_path string, stats_json string")
-
-    def pruned_files(self, col: str, lo, hi) -> list[str]:
-        """Files whose [min,max] for col intersects [lo,hi] — the scan
-        set for a range predicate. Files without stats are kept (safe)."""
-        head = self.main_head()
-        if head == 0:
-            raise ValueError(f"table {self.name} does not exist")
-        return self._pruned_files_in(self._read_manifest(head), col, lo, hi)
-
-    def _pruned_files_in(self, m: dict, col: str, lo, hi) -> list[str]:
-        """pruned_files against an ALREADY-READ head manifest — range
-        scans read the snapshot log once and share the manifest between
-        pruning, schema and the file scan (review-pass r15: the scan
-        path walked the log three times per call)."""
-        # stats store timestamps as ISO strings; normalize TEMPORAL
-        # bounds to the stats' 'T'-separated convention (ISO-8601
-        # orders lexicographically only within one separator
-        # convention).  The normalization is gated on the COLUMN's own
-        # dtype, exactly like read_range's bound() below (VERDICT r14
-        # #2): a date-SHAPED bound on a STRING column must compare raw
-        # against the raw string stats — normalizing it to
-        # '...T00:00:00' would over-prune a file whose string max is
-        # the bare 'YYYY-MM-DD'.  DATE-column stats carry an explicit
-        # midnight (see _file_column_stats.enc), so DATE bounds share
-        # the timestamp convention after normalization.  The gate
-        # travels with this API — callers can't forget it (VERDICT r14
-        # #7).
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(m["schema"])
-        temporal_col = col in schema.fieldNames() and is_temporal_dtype(
-            schema[col].dataType
-        )
-        if temporal_col:
-            lo_n = temporal_bound_iso(lo, sep="T")
-            hi_n = temporal_bound_iso(hi, sep="T")
-            if lo_n is None or hi_n is None:
-                # a bound the normalizer can't canonicalize must FAIL
-                # LOUDLY on a temporal column — the raw space-separated
-                # string would compare lexicographically against
-                # 'T'-separated stats and silently drop files
-                # (review-pass r15; fractional-minute ISO shapes like
-                # '08:30.5' are rejected: pass full seconds)
-                raise ValueError(
-                    f"unsupported temporal bound for {col!r}: "
-                    f"{lo!r}..{hi!r} — pass "
-                    "'YYYY-MM-DD[ HH:MM:SS[.ffffff]]' or datetime/date"
-                )
-            lo, hi = lo_n, hi_n
-        stats = m.get("stats", {})
-        out = []
-        for f in m["files"]:
-            s = stats.get(f)
-            if not s or col not in s.get("min", {}):
-                out.append(f)
-                continue
-            fmin, fmax = s["min"][col], s["max"][col]
-            if temporal_col:
-                # self-healing for stats written before the midnight
-                # canonicalization (review-pass r15): manifests carry
-                # file stats FORWARD across commits, so a legacy
-                # date-only 'YYYY-MM-DD' stat on a DATE column would
-                # still sort before its own day's normalized bound —
-                # pad stats through the same normalizer the bounds use
-                fmin = temporal_bound_iso(fmin, sep="T") or fmin
-                fmax = temporal_bound_iso(fmax, sep="T") or fmax
-            if not (fmax < lo or fmin > hi):
-                out.append(f)
-        return out
+        return local_frame(self.spark, rows, "file_path string, stats_json string")
 
     def rewrite_sorted(self, col: str, target_files: int = 8) -> int:
         """rewrite_data_files(strategy => 'sort', sort_order => col):
@@ -2520,7 +2652,7 @@ class StatsLakehouseTable(LakehouseTable):
         files = self._pruned_files_in(m, col, lo, hi)
         if not files:
             schema = StructType.fromJson(m["schema"])
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         df = self._scan_files(files, m)
 
         temporal_col = is_temporal_dtype(df.schema[col].dataType)
@@ -2550,8 +2682,8 @@ def history(table: LakehouseTable) -> DataFrame:
         except FileNotFoundError:
             continue  # expired snapshot
         rows.append((v, m["parent"], m["op"], m["timestamp_ms"]))
-    return table.spark.createDataFrame(
-        rows, "version int, parent int, operation string, ts_ms long"
+    return local_frame(
+        table.spark, rows, "version int, parent int, operation string, ts_ms long"
     )
 
 
@@ -2595,6 +2727,7 @@ def cherrypick_snapshot(table: LakehouseTable, version: int) -> int:
             "files": files,
             "schema": table.schema_json(),
             "op": f"cherrypick_v{version}",
+            "stats": m.get("stats", {}),
         },
         parent,
     )

@@ -35,7 +35,11 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lakehouse import local_frame
+
 _DML_HEADS = ("MERGE", "UPDATE", "DELETE", "CALL", "ALTER", "INSERT", "CREATE")
+_SUMMARY = "table string, operation string, version int, n_rows long"
+_ALTER_SUMMARY = "table string, operation string, version int, detail string"
 
 
 def _strip(sql: str) -> str:
@@ -417,11 +421,8 @@ def execute_create(engine, sql: str) -> DataFrame:
     except ValueError:
         return engine.spark.sql(sql)
     t = engine.create_table(table, _run_body(engine, select))
-    n = t.read().count()
-    return engine.spark.createDataFrame(
-        [(table, "ctas", t.current_version(), n)],
-        "table string, operation string, version int, n_rows long",
-    )
+    row = (table, "ctas", t.current_version(), t.row_count())
+    return local_frame(engine.spark, [row], _SUMMARY)
 
 
 def execute_insert(engine, sql: str) -> DataFrame:
@@ -441,7 +442,7 @@ def execute_insert(engine, sql: str) -> DataFrame:
         t = engine.managed(table)
     except (KeyError, ValueError):
         return engine.spark.sql(sql)
-    from .lakehouse import BranchedLakehouse, commit_with_retries
+    from .lakehouse import BranchedLakehouse, commit_with_retries, record_count
 
     df = _run_body(engine, body)
     if branch is not None:
@@ -460,22 +461,17 @@ def execute_insert(engine, sql: str) -> DataFrame:
         # this differs from the insert/insert_overwrite arms below,
         # which report the post-statement TABLE total — a branch
         # INSERT's table total is ambiguous (which ref?), the batch is
-        # not. Counted from the NEWLY WRITTEN files' parquet footers
+        # not. Counted from the NEWLY WRITTEN files' record counts
         # (O(batch) metadata reads), never by re-running the source
         # SELECT — a non-deterministic source would otherwise report a
         # count differing from the rows actually written (ADVICE r9).
-        import pyarrow.parquet as pq
-
         man = t._read_manifest(version)
         base_files = set(t._files(int(man.get("ref_base") or 0)))
-        n = sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in man["files"]
-            if f not in base_files
-        )
-        return engine.spark.createDataFrame(
+        n = record_count(man, [f for f in man["files"] if f not in base_files])
+        return local_frame(
+            engine.spark,
             [(f"{table}.branch_{branch}", "insert_branch", version, n)],
-            "table string, operation string, version int, n_rows long",
+            _SUMMARY,
         )
     if mode == "INTO":
         # SQL INSERT binds positionally (a VALUES frame arrives named
@@ -490,11 +486,8 @@ def execute_insert(engine, sql: str) -> DataFrame:
         version = commit_with_retries(lambda: t.overwrite_positional(df))
         op = "insert_overwrite"
     engine.refresh_view(table)
-    n = t.read().count()
-    return engine.spark.createDataFrame(
-        [(table, op, version, n)],
-        "table string, operation string, version int, n_rows long",
-    )
+    row = (table, op, version, t.row_count())
+    return local_frame(engine.spark, [row], _SUMMARY)
 
 
 _ALTER_ADD_RE = re.compile(
@@ -617,15 +610,11 @@ def execute_alter(engine, sql: str) -> DataFrame:
             version = b.drop_branch(name)
         else:  # drop_tag
             version = b.drop_tag(name)
-        return engine.spark.createDataFrame(
-            [(table, "alter", version, f"{action} {name}")],
-            "table string, operation string, version int, detail string",
-        )
+        row = (table, "alter", version, f"{action} {name}")
+        return local_frame(engine.spark, [row], _ALTER_SUMMARY)
     engine.refresh_view(table)
-    return engine.spark.createDataFrame(
-        [(table, "alter", version, detail)],
-        "table string, operation string, version int, detail string",
-    )
+    row = (table, "alter", version, detail)
+    return local_frame(engine.spark, [row], _ALTER_SUMMARY)
 
 
 # --- dispatcher ------------------------------------------------------------
@@ -637,7 +626,11 @@ def execute(engine, sql: str) -> DataFrame:
     Returns a one-row commit-summary frame — (table, operation,
     version, n_rows) for DML, (table, procedure, result) for CALL —
     the shape ``spark-sql`` users see from Iceberg, and keeps the
-    SQL-door temp view pointed at the new snapshot.
+    SQL-door temp view pointed at the new snapshot. ``n_rows`` is the
+    table's row total after the statement, summed from the manifest's
+    per-file record counts rather than by a scan, and the summary is a
+    LocalRelation, so collecting it starts no Spark job: the statement
+    costs only its copy-on-write rewrite.
     """
     kind = classify(sql)
     if kind is None:
@@ -714,11 +707,8 @@ def execute(engine, sql: str) -> DataFrame:
             )
         )
     engine.refresh_view(table)
-    n = t.read().count()
-    return spark.createDataFrame(
-        [(table, kind.lower(), version, n)],
-        "table string, operation string, version int, n_rows long",
-    )
+    row = (table, kind.lower(), version, t.row_count())
+    return local_frame(spark, [row], _SUMMARY)
 
 
 # ---- SELECT-side time travel (Iceberg SQL: VERSION/TIMESTAMP AS OF) --------
@@ -944,6 +934,8 @@ def execute_call(engine, sql: str) -> DataFrame:
         if isinstance(result, list)
         else str(result)
     )
-    return engine.spark.createDataFrame(
-        [(table, proc, summary)], "table string, procedure string, result string"
+    return local_frame(
+        engine.spark,
+        [(table, proc, summary)],
+        "table string, procedure string, result string",
     )

@@ -489,3 +489,21 @@ def test_bench_previous_floors_layout_gated(tmp_path, monkeypatch):
     )
     assert bench.previous_floors("single") == {"q1": 4.0}
     assert bench.previous_floors("multi16") == {"q1": 3.0}  # sidecar still wins
+
+
+def test_bench_one_rejects_malformed_passes():
+    """`--passes x` / `--passes=` / `--passes 0` exit with a usage
+    message before Spark starts, not a raw int() ValueError."""
+    import subprocess
+
+    script = os.path.join(REPO, "tools", "bench_one.py")
+    for argv in (["--passes", "x"], ["--passes="], ["--passes", "0"]):
+        p = subprocess.run(
+            [sys.executable, script, "q1_pricing_summary", *argv],
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        assert p.returncode != 0, argv
+        assert "--passes needs a positive integer" in p.stderr, p.stderr
+        assert "Traceback" not in p.stderr, p.stderr

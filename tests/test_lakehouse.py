@@ -1952,3 +1952,204 @@ def test_commit_lock_released_on_failure(wh):
         t._commit({"files": [], "schema": {"fields": []}, "op": "x"}, 7)
     # immediately committable again: lock was released
     assert t._commit({"files": [], "schema": {"fields": []}, "op": "x"}, 1) == 2
+
+
+# --- file-scoped MERGE, per-file stats across handles, local frames --------
+
+
+def _range_files_table(spark, wh, name="fm"):
+    """A stats-carrying table of ids 0..299 in three key-disjoint files."""
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        StatsLakehouseTable,
+    )
+
+    t = StatsLakehouseTable(spark, wh, name)
+    t.create(
+        spark.range(0, 300)
+        .selectExpr("id AS k", "id * 10 AS v")
+        .repartitionByRange(3, "k")
+    )
+    m = t._read_manifest(t.main_head())
+    assert len(m["files"]) == 3
+    return t, m
+
+
+def test_merge_rewrites_only_files_overlapping_source_keys(spark, wh):
+    """Source keys inside one file's [min, max]: only that file is
+    rewritten; every other file keeps its path and its stats entry."""
+    t, before = _range_files_table(spark, wh)
+    src = spark.createDataFrame([(10, -1), (20, -2)], "k long, v long")
+    t.merge_into(src, on="k")
+    after = t._read_manifest(t.main_head())
+    hit = [
+        f
+        for f in before["files"]
+        if before["stats"][f]["min"]["k"] <= 10 <= before["stats"][f]["max"]["k"]
+    ]
+    untouched = [f for f in before["files"] if f not in hit]
+    assert len(hit) == 1 and len(untouched) == 2
+    assert after["rewritten"] == 1
+    for f in untouched:
+        assert f in after["files"]
+        assert after["stats"][f] == before["stats"][f]
+    assert hit[0] not in after["files"]
+    rows = {r.k: r.v for r in t.read().collect()}
+    assert len(rows) == 300 and rows[10] == -1 and rows[20] == -2
+    assert rows[11] == 110 and rows[299] == 2990
+    assert t.row_count() == 300
+
+
+def test_merge_all_null_source_keys_inserts_only(spark, wh):
+    """A source whose keys are all NULL matches nothing: its rows are
+    inserted and no existing file is a candidate for the rewrite."""
+    t, before = _range_files_table(spark, wh)
+    src = spark.createDataFrame([(None, 1), (None, 2)], "k long, v long")
+    t.merge_into(src, on="k")
+    after = t._read_manifest(t.main_head())
+    assert after["rewritten"] == 0
+    assert set(before["files"]) <= set(after["files"])
+    assert t.read().filter("k IS NULL").count() == 2
+    assert t.read().count() == 302 == t.row_count()
+
+
+def test_merge_source_key_type_mismatch_skips_pruning(spark, wh):
+    """A source key of another type than the table's (string vs long)
+    disables pruning — every file stays a candidate — instead of
+    comparing str bounds with int stats (TypeError)."""
+    t, before = _range_files_table(spark, wh)
+    src = spark.createDataFrame([("5", 55), ("400", 4)], "k string, v long")
+    t.merge_into(src, on="k", update_cols={"v": F.col("__src").getField("v")})
+    after = t._read_manifest(t.main_head())
+    assert after["rewritten"] == 3
+    rows = {r.k: r.v for r in t.read().collect()}
+    assert rows[5] == 55 and rows[400] == 4 and len(rows) == 301
+
+
+def test_merge_schema_evolution_keeps_untouched_files_absent(spark, wh):
+    """Untouched files predate a MERGE-evolved column: they read NULL for
+    it, even when a dropped column of the same name is still in them."""
+    t, _ = _range_files_table(spark, wh)
+    t.drop_column("v")
+    src = spark.createDataFrame([(10, 7)], "k long, v long")
+    t.merge_into(src, on="k", schema_evolution=True)
+    rows = {r.k: r.v for r in t.read().collect()}
+    assert rows[10] == 7
+    assert all(v is None for k, v in rows.items() if k != 10)
+
+
+def test_pruning_ignores_stats_of_renamed_or_absent_columns(spark, wh):
+    """Footer stats are keyed by physical name: after RENAME the old
+    files prune under their physical name, and after DROP + re-ADD the
+    old files (which read the default) are never pruned on the stale
+    stats of the dropped column."""
+    t, _ = _range_files_table(spark, wh)
+    t.rename_column("k", "key")
+    assert len(t.pruned_files("key", 0, 5)) == 1
+    assert t.read_range("key", 0, 5).count() == 6
+    t.drop_column("v")
+    t.add_column("v", "long", default=7)
+    assert len(t.pruned_files("v", 7, 7)) == 3
+    assert t.read_range("v", 7, 7).count() == 300
+
+
+def test_stats_survive_dml_through_every_handle(spark, wh):
+    """Regression: DML through a catalog handle (a plain LakehouseTable)
+    used to commit a manifest with no stats, and pruning then kept every
+    file forever. Kept files' stats must survive, so pruning still
+    prunes, through the LakehouseCatalog and the REST catalog alike."""
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+    from dbx_workspace_and_emr_iceberg_spark.sources.catalog import (
+        LakehouseCatalog,
+    )
+    from dbx_workspace_and_emr_iceberg_spark.sources.rest_catalog import (
+        RestCatalogClient,
+        RestCatalogServer,
+        RestLakehouseCatalog,
+    )
+
+    eng = Engine(spark, warehouse=os.path.join(wh, "local", "default"))
+    eng.create_table(
+        "orders",
+        spark.range(0, 300)
+        .selectExpr("id AS k", "id * 10 AS v")
+        .repartitionByRange(3, "k"),
+    )
+
+    def assert_stats_kept(before: dict, handle) -> None:
+        after = handle._read_manifest(handle.main_head())
+        assert after["version"] > before["version"]
+        kept = [f for f in before["stats"] if f in after["files"]]
+        assert kept, "every file rewritten: the check would be vacuous"
+        for f in kept:
+            assert after["stats"][f] == before["stats"][f]
+        assert len(handle.pruned_files("k", 250, 260)) < len(after["files"])
+
+    with RestCatalogServer(wh, catalog="local") as server:
+        handles = [
+            LakehouseCatalog(spark, wh).table("orders"),
+            RestLakehouseCatalog(spark, RestCatalogClient(server.uri)).table(
+                "default.orders"
+            ),
+        ]
+        for base, h in zip((1, 4), handles):
+            assert type(h) is LakehouseTable
+            before = h._read_manifest(h.main_head())
+            h.delete_where(F.col("k") == base)
+            assert_stats_kept(before, h)
+            before = h._read_manifest(h.main_head())
+            h.update_set(F.col("k") == base + 1, {"v": F.lit(0)})
+            assert_stats_kept(before, h)
+            before = h._read_manifest(h.main_head())
+            h.merge_into(
+                spark.createDataFrame([(base + 2, 0)], "k long, v long"), on="k"
+            )
+            assert_stats_kept(before, h)
+    assert eng.managed("orders").read().count() == 298
+
+
+def test_local_frame_type_parity(spark):
+    """local_frame (the Arrow LocalRelation every driver-built frame in
+    sources/ uses) round-trips the same values and schema as
+    createDataFrame(list) for every type its callers pass, NULLs
+    included, and yields a correctly typed empty frame for any table
+    schema."""
+    import datetime
+    import decimal
+
+    from pyspark.sql.types import StructType
+
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        local_frame,
+    )
+
+    ddl = "s string, i int, l long, d string"
+    rows = [
+        ("t", 3, 150_000, "add c long"),
+        (None, None, None, None),
+        ("ü€", -(2**31), 2**63 - 1, ""),
+    ]
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert "LocalTableScan" in got._jdf.queryExecution().executedPlan().toString()
+
+    wide = StructType.fromDDL(
+        "a int, b long, c string, d double, e timestamp, f timestamp_ntz, "
+        "g date, h decimal(12,2), i boolean, j array<int>, "
+        "k map<string,int>, l struct<x:int,y:string>, m binary, n float, "
+        "o short, p byte"
+    )
+    empty = local_frame(spark, [], wide)
+    assert empty.schema == wide
+    assert empty.collect() == []
+    one = [
+        (
+            1, 2, "x", 1.5, None, datetime.datetime(2024, 1, 2, 3, 4, 5),
+            datetime.date(2024, 1, 2), decimal.Decimal("12.34"), True, [1, None],
+            {"a": 1}, (1, "y"), b"\x00\x01", 0.5, 7, -3,
+        )
+    ]
+    assert local_frame(spark, one, wide).collect() == spark.createDataFrame(
+        one, wide
+    ).collect()

@@ -615,27 +615,38 @@ def test_hash_halves_python_jvm_agree(spark, keys):
     ),
     mode=st.sampled_from(["star", "listed", "none"]),
     insert=st.booleans(),
+    multi_file=st.booleans(),
 )
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-def test_merge_update_semantics_property(spark, tgt, src, mode, insert):
+def test_merge_update_semantics_property(spark, tgt, src, mode, insert, multi_file):
     """Pin the full r10 MERGE UPDATE contract against a pure-Python
     model: update_cols=None takes every column from source (SET *);
     an explicit dict updates only the listed columns (others keep the
     TARGET value); {} leaves matched rows untouched; the delete
     condition (src.a < 0) wins over update; unmatched source rows
-    insert iff insert=True; target-only rows always survive."""
+    insert iff insert=True; target-only rows always survive.
+    ``multi_file`` range-partitions a stats-carrying target into up to
+    three files, so the file-scoped MERGE really prunes files against
+    the same model."""
     import shutil as _shutil
     import tempfile as _tempfile
 
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        StatsLakehouseTable,
+    )
+
     wh = _tempfile.mkdtemp(prefix="merge_prop_")
     try:
-        t = LakehouseTable(spark, wh, "mp")
-        t.create(
-            spark.createDataFrame(
-                [(k, a, b) for k, (a, b) in tgt.items()],
-                "k long, a long, b long",
-            )
+        tgt_df = spark.createDataFrame(
+            [(k, a, b) for k, (a, b) in tgt.items()],
+            "k long, a long, b long",
         )
+        if multi_file:
+            t = StatsLakehouseTable(spark, wh, "mp")
+            t.create(tgt_df.repartitionByRange(3, "k"))
+        else:
+            t = LakehouseTable(spark, wh, "mp")
+            t.create(tgt_df)
         src_df = spark.createDataFrame(
             [(k, a, b) for k, (a, b) in src.items()],
             "k long, a long, b long",

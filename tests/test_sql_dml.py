@@ -1055,3 +1055,81 @@ def test_rewrite_leaves_backslash_escaped_literals_alone():
     # backslash-escaped literal must not be rewritten
     sql = r"SELECT 'x\' VERSION AS OF 3 ' AS lit FROM t"
     assert sql_dml.rewrite_time_travel(object(), sql) == sql
+
+
+def test_summary_n_rows_from_metadata_every_arm(spark, tmp_path):
+    """n_rows comes from the manifest's per-file record counts, not a
+    scan. For every SQL-door arm it must equal what a scan counts (the
+    batch for a branch INSERT), including across an ADD COLUMN ...
+    DEFAULT and a RENAME COLUMN, and on a table whose manifest has no
+    counts at all (footer fallback). Collecting each summary starts no
+    Spark job: it is a LocalRelation."""
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        BranchedLakehouse,
+        LakehouseTable,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    eng = Engine(spark, warehouse=str(tmp_path))
+    spark.range(0, 40).selectExpr("id AS k", "id * 2 AS v").createOrReplaceTempView(
+        "nr_src"
+    )
+    spark.createDataFrame(
+        [(3, 100, 0), (39, 101, 0), (500, 102, 0), (None, 103, 0)],
+        "k long, v2 long, w long",
+    ).createOrReplaceTempView("nr_merge")
+    # no record counts in this table's manifests: a stats-less writer
+    LakehouseTable(spark, str(tmp_path), "nr_legacy").create(
+        spark.range(0, 25).selectExpr("id AS k", "id AS v").repartition(3)
+    )
+
+    def summary(sql: str, group: str):
+        out = eng.sql(sql)
+        sc.setJobGroup(group, group)
+        try:
+            row = out.collect()[0]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert tracker.getJobIdsForGroup(group) == [], f"{sql}: summary ran a job"
+        return row
+
+    def scan(table: str) -> int:
+        return eng.managed(table).read().count()
+
+    try:
+        steps = [
+            ("nr_t", "CREATE TABLE nr_t AS SELECT * FROM nr_src"),
+            ("nr_t", "UPDATE nr_t SET v = v + 1 WHERE k < 10"),
+            ("nr_t", "DELETE FROM nr_t WHERE k = 12345"),  # no-op
+            ("nr_t", "DELETE FROM nr_t WHERE k BETWEEN 5 AND 8"),
+            ("nr_t", "ALTER TABLE nr_t ADD COLUMN w long DEFAULT 7"),
+            ("nr_t", "ALTER TABLE nr_t RENAME COLUMN v TO v2"),
+            (
+                "nr_t",
+                "MERGE INTO nr_t t USING nr_merge s ON t.k = s.k "
+                "WHEN MATCHED THEN UPDATE SET v2 = s.v2 "
+                "WHEN NOT MATCHED THEN INSERT *",
+            ),
+            ("nr_t", "INSERT INTO nr_t VALUES (900, 1, 2), (901, 3, 4)"),
+            ("nr_legacy", "DELETE FROM nr_legacy WHERE k = 3"),
+            ("nr_legacy", "INSERT INTO nr_legacy VALUES (77, 77)"),
+            ("nr_t", "INSERT OVERWRITE nr_t SELECT k, v, v FROM nr_src WHERE k < 9"),
+        ]
+        for i, (table, sql) in enumerate(steps):
+            row = summary(sql, f"nr_summary_{i}")
+            if "ALTER" not in sql:
+                assert row.n_rows == scan(table), sql
+        eng.sql("ALTER TABLE nr_t CREATE BRANCH b")
+        base = scan("nr_t")
+        row = summary("INSERT INTO nr_t.branch_b VALUES (1, 2, 3)", "nr_summary_b")
+        assert row.operation == "insert_branch"
+        t = eng.managed("nr_t")
+        assert row.n_rows == BranchedLakehouse(t).read_ref("b").count() - base == 1
+        assert summary(
+            "CALL system.rewrite_manifests('nr_t')", "nr_summary_call"
+        ).procedure == "rewrite_manifests"
+    finally:
+        for v in ("nr_src", "nr_merge", "nr_t", "nr_legacy"):
+            spark.catalog.dropTempView(v)

@@ -23,6 +23,18 @@ from dbx_workspace_and_emr_iceberg_spark.registry import all_queries  # noqa: E4
 from dbx_workspace_and_emr_iceberg_spark.session import get_spark  # noqa: E402
 
 
+def parse_passes(raw: str) -> int:
+    """The --passes value as a positive int; anything else exits with
+    a usage message before Spark starts, not a raw int() traceback."""
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        sys.exit(f"--passes needs a positive integer, got {raw!r}")
+    return n
+
+
 def main() -> None:
     # accept both --passes=N and --passes N (ADVICE r19: the split("=")
     # form raised IndexError on bare --passes and swallowed the value
@@ -39,10 +51,10 @@ def main() -> None:
         if a == "--passes":
             if i + 1 >= len(argv):
                 sys.exit("--passes needs a value (N or --passes=N)")
-            passes = int(argv[i + 1])
+            passes = parse_passes(argv[i + 1])
             i += 1
         elif a.startswith("--passes="):
-            passes = int(a.split("=", 1)[1])
+            passes = parse_passes(a.split("=", 1)[1])
         elif a.startswith("--"):
             pass  # unknown flag: ignored, as before r20
         else:
