@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .session import get_spark
 from .sources import sql_dml
-from .sources.lakehouse import LakehouseTable, StatsLakehouseTable
+from .sources.lakehouse import LakehouseTable
 from .tables import TABLES, load_table, register_temp_views
 
 
@@ -82,11 +82,8 @@ class Engine:
             raise ValueError("Engine needs a warehouse dir for managed tables")
         return self.warehouse
 
-    def create_table(
-        self, name: str, df: DataFrame, with_stats: bool = True
-    ) -> LakehouseTable:
-        cls = StatsLakehouseTable if with_stats else LakehouseTable
-        t = cls(self.spark, self._require_warehouse(), name)
+    def create_table(self, name: str, df: DataFrame) -> LakehouseTable:
+        t = LakehouseTable(self.spark, self._require_warehouse(), name)
         t.create(df)
         self._tables[name] = t
         t.read().createOrReplaceTempView(name)  # SQL door sees it too
@@ -94,16 +91,7 @@ class Engine:
 
     def managed(self, name: str) -> LakehouseTable:
         if name not in self._tables:
-            # StatsLakehouseTable, matching create_table's default: a
-            # re-opened table (new Engine over an existing warehouse)
-            # previously came back as the BASE class, which crashed the
-            # CALL rewrite_data_files sort/zorder strategies
-            # (AttributeError — they live on the subclass) and
-            # silently dropped the per-file min/max stats from every
-            # subsequent DML commit (review-pass r15). Stats-less
-            # manifests read fine through the subclass (files without
-            # stats are always kept by the pruner).
-            t = StatsLakehouseTable(self.spark, self._require_warehouse(), name)
+            t = LakehouseTable(self.spark, self._require_warehouse(), name)
             if t.current_version() == 0:
                 raise KeyError(f"no managed table {name!r}")
             self._tables[name] = t

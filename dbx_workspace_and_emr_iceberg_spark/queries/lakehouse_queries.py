@@ -677,7 +677,7 @@ def m6_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
 
         v = t.add_column("r_comment", "string")
         assert set(t._files()) == files_v1, "ADD COLUMN rewrote no files"
-        evolved = t.read_evolved()
+        evolved = t.read()
         assert "r_comment" in evolved.columns, "new column visible"
         assert evolved.filter(F.col("r_comment").isNotNull()).count() == 0, (
             "new column reads NULL from old files"
@@ -691,12 +691,12 @@ def m6_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.lit("filled").alias("r_comment"),
             )
         )
-        full = t.read_evolved()
+        full = t.read()
         assert full.filter(F.col("r_comment") == "filled").count() == 2, (
             "new files carry the evolved column"
         )
         # old snapshot still reads with original schema
-        assert "r_comment" not in t.read_evolved(version=1).columns, (
+        assert "r_comment" not in t.read(version=1).columns, (
             "time travel sees pre-evolution schema"
         )
         steps.append(("evolved_append", v, full.count()))
@@ -818,8 +818,6 @@ def m7_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert (ADVICE r11) — a violation flips the flag and hash-reds,
     instead of raising before the oracle can see it. m7b remains the
     content twin pinning the row VALUES through the same lifecycle."""
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_")
     try:
         # ten days of events: days(ts) x bucket(4) = ~40 partition dirs —
@@ -833,10 +831,8 @@ def m7_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("ts") >= F.lit("2024-01-10 00:00:00").cast("timestamp"))
             & (F.col("ts") < F.lit("2024-01-20 00:00:00").cast("timestamp"))
         )
-        t = PartitionedLakehouseTable(
-            spark, wh, "events_p", ["days(ts)", "bucket(4, user_id)"]
-        )
-        t.create(ev)
+        t = LakehouseTable(spark, wh, "events_p")
+        t.create(ev, partition_by=["days(ts)", "bucket(4, user_id)"])
         n = t.read().count()
 
         # hidden partition pruning: range-filter on ts (the SOURCE
@@ -976,8 +972,6 @@ def m7b_partition_evolution_values(
     from the fixture; the pruning effect itself is asserted in-query
     on read_pruned's (files_scanned, files_total) both before and
     after the spec change."""
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_m7b_")
     try:
         ev = (
@@ -990,10 +984,8 @@ def m7b_partition_evolution_values(
         )
         base = ev.filter(F.col("event_id") % 5 == 0)
         appended = ev.filter(F.col("event_id") % 5 == 1)
-        t = PartitionedLakehouseTable(
-            spark, wh, "events_m7b", ["days(ts)", "bucket(4, user_id)"]
-        )
-        t.create(base)
+        t = LakehouseTable(spark, wh, "events_m7b")
+        t.create(base, partition_by=["days(ts)", "bucket(4, user_id)"])
 
         day_lo, day_hi = "2024-01-15 00:00:00", "2024-01-16 00:00:00"
         day_df, kept_f, all_f = t.read_pruned(
@@ -1091,8 +1083,6 @@ def s6_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
       3. the old snapshot still reads the pre-overwrite day (time
          travel unaffected — overwrite is a new snapshot, not a
          mutation)."""
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_")
     try:
         steps: list[tuple[str, int, int]] = []
@@ -1105,8 +1095,8 @@ def s6_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
                 & (F.col("ts") < F.lit("2024-01-14 00:00:00").cast("timestamp"))
             )
         )
-        t = PartitionedLakehouseTable(spark, wh, "events_dpo", ["days(ts)"])
-        v0 = t.create(ev)
+        t = LakehouseTable(spark, wh, "events_dpo")
+        v0 = t.create(ev, partition_by=["days(ts)"])
         n0 = t.read().count()
         steps.append(("create_partitioned", v0, n0))
 
@@ -1198,8 +1188,6 @@ def s6b_dynamic_overwrite_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     time travel (phase='old_day'). A static overwrite (whole-table
     replace), a leak into untouched days, or broken time travel all
     change the returned values and hash-red."""
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_s6b_")
     try:
         ev = (
@@ -1211,8 +1199,8 @@ def s6b_dynamic_overwrite_values(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("ts") < F.lit("2024-01-14 00:00:00").cast("timestamp"))
             )
         )
-        t = PartitionedLakehouseTable(spark, wh, "events_s6b", ["days(ts)"])
-        v0 = t.create(ev)
+        t = LakehouseTable(spark, wh, "events_s6b")
+        v0 = t.create(ev, partition_by=["days(ts)"])
         in_day = (
             F.col("ts") >= F.lit("2024-01-12 00:00:00").cast("timestamp")
         ) & (F.col("ts") < F.lit("2024-01-13 00:00:00").cast("timestamp"))
@@ -1546,18 +1534,14 @@ def m9_stats_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture-derivable. Flags are computed from the measurements with
     NO preceding assert (ADVICE r11) — a violation flips the flag and
     hash-reds. s7b remains the metadata-relation value twin."""
-    from ..sources.lakehouse import (
-        StatsLakehouseTable,
-        cherrypick_snapshot,
-        history,
-    )
+    from ..sources.lakehouse import cherrypick_snapshot, history
 
     wh = tempfile.mkdtemp(prefix="lakehouse_")
     try:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderdate", "o_totalprice"
         ).filter(F.col("o_orderkey") % 2 == 0)  # stats pruning is volume-free
-        t = StatsLakehouseTable(spark, wh, "orders_s")
+        t = LakehouseTable(spark, wh, "orders_s")
         # write ordered by date so files get disjoint o_orderdate ranges
         t.create(o.repartitionByRange(6, "o_orderdate"))
         n_files = len(t._files())
@@ -1660,14 +1644,14 @@ FROM nation
     "s7b_metadata_tables_values", oracle=_S7B_ORACLE, tags=("S7", "M5")
 )
 def s7b_metadata_tables_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.lakehouse import StatsLakehouseTable, history
+    from ..sources.lakehouse import history
 
     wh = tempfile.mkdtemp(prefix="lakehouse_s7b_")
     try:
         nat = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
-        t = StatsLakehouseTable(spark, wh, "nation_s7b")
+        t = LakehouseTable(spark, wh, "nation_s7b")
         t.create(nat.repartition(2))  # exactly 2 data files
         t.append(
             nat.filter(F.col("n_nationkey") < 5)
@@ -1955,15 +1939,13 @@ def m11_sorted_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout-only), (d) the range row count matches the fixture. Flags
     computed with NO preceding assert (ADVICE r11) — a violation flips
     a flag and hash-reds."""
-    from ..sources.lakehouse import StatsLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_sort_")
     try:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
         )
         # hash layout: every file spans the whole key range
-        t = StatsLakehouseTable(spark, wh, "lineitem_cluster")
+        t = LakehouseTable(spark, wh, "lineitem_cluster")
         t.create(li.repartition(8, "l_partkey"))
 
         lo, hi = 100, 500
@@ -2040,14 +2022,12 @@ def m13_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-pruned; the parity flags catch silent row loss), (d) row
     count and both probe-range counts match the fixture. Flags
     computed with NO preceding assert (ADVICE r11)."""
-    from ..sources.lakehouse import StatsLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_zorder_")
     try:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity"
         )
-        t = StatsLakehouseTable(spark, wh, "lineitem_z")
+        t = LakehouseTable(spark, wh, "lineitem_z")
         t.create(li.repartition(16, "l_quantity"))
 
         keys = li.agg(
@@ -2159,8 +2139,6 @@ def p3_hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SparkScanBuilder (reference main.tf:792-806, README.md:36)."""
     import os
 
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     shutil.rmtree(os.path.join(_P3_WH, "events_p3"), ignore_errors=True)
     ev = (
         load_table(spark, sf_dir, "events")
@@ -2171,8 +2149,8 @@ def p3_hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("ts") < F.lit("2024-01-20 00:00:00").cast("timestamp"))
         )
     )
-    t = PartitionedLakehouseTable(spark, _P3_WH, "events_p3", ["days(ts)"])
-    t.create(ev)
+    t = LakehouseTable(spark, _P3_WH, "events_p3")
+    t.create(ev, partition_by=["days(ts)"])
 
     lo = "2024-01-15 00:00:00"
     hi = "2024-01-16 00:00:00"

@@ -388,11 +388,12 @@ class LakehouseTable:
         version = expected_parent + 1
         os.makedirs(self.snap_dir, exist_ok=True)
         pm = self._read_manifest(expected_parent) if expected_parent else {}
-        # column initial-defaults (add_column(default=...)) and rename
-        # mappings (rename_column) ride every subsequent commit
-        # unchanged unless the committer set its own — a commit that
-        # dropped them would silently break old-file reads
-        for key in ("defaults", "renames"):
+        # column initial-defaults (add_column(default=...)), rename
+        # mappings (rename_column) and the partition spec (create,
+        # evolve_partitioning) ride every subsequent commit unchanged
+        # unless the committer set its own — a commit that dropped them
+        # would silently break old-file reads or later writes' layout
+        for key in ("defaults", "renames", "partition_spec"):
             if key not in manifest and pm.get(key):
                 manifest[key] = pm[key]
         self._attach_file_stats(manifest, pm)
@@ -466,8 +467,8 @@ class LakehouseTable:
         main head (review-pass r18): after a staged branch write the
         log parent is the branch's manifest, and main files absent from
         it would otherwise lose their stats in every later main commit.
-        This runs for every handle class, so DML through a stats-less
-        handle (a catalog's LakehouseTable) keeps the kept files' stats
+        Entries live in the manifest, not the handle, so DML through any
+        handle (a catalog's or the engine's) keeps the kept files' stats
         and pruning keeps working."""
         prev: dict = {}
         if pm.get("staged_ref"):
@@ -484,18 +485,43 @@ class LakehouseTable:
         else:
             manifest.pop("stats", None)
 
-    def _write_files(self, df: DataFrame) -> list[str]:
+    def _write_files(
+        self, df: DataFrame, spec: list[str] | None = None
+    ) -> list[str]:
         """Materialize df as new immutable parquet files; returns paths.
         Files are written to a unique subdir then registered by name —
-        the manifest, not the directory listing, defines the table."""
-        batch = uuid.uuid4().hex[:12]
-        out = os.path.join(self.data_dir, batch)
-        df.write.mode("overwrite").parquet(out)
-        return sorted(
-            os.path.join(out, f)
-            for f in os.listdir(out)
+        the manifest, not the directory listing, defines the table.
+
+        Rows are laid out by the partition transforms of ``spec``
+        (default: the head manifest's, :meth:`partition_spec`) as
+        hive-style dirs of the *derived* columns, which never enter
+        the manifest schema — the 'hidden' in hidden partitioning.
+        Every file's stats (record count, column min/max) are collected
+        for the commit (_attach_file_stats)."""
+        if spec is None:
+            spec = self.partition_spec()
+        cols = dict(partition_transform(s) for s in spec)
+        out = os.path.join(self.data_dir, uuid.uuid4().hex[:12])
+        if cols:
+            df.withColumns(cols).write.mode("overwrite").partitionBy(
+                *cols
+            ).parquet(out)
+        else:
+            df.write.mode("overwrite").parquet(out)
+        files = sorted(
+            os.path.join(root, f)
+            for root, _dirs, names in os.walk(out)
+            for f in names
             if f.endswith(".parquet")
         )
+        self._pending_stats.update({f: _file_column_stats(f) for f in files})
+        return files
+
+    def partition_spec(self) -> list[str]:
+        """The head manifest's partition transforms, e.g.
+        ``["days(ts)", "bucket(4, id)"]``; ``[]`` = unpartitioned."""
+        v = self.main_head()
+        return self._read_manifest(v).get("partition_spec", []) if v else []
 
     def _files(self, version: int | None = None) -> list[str]:
         # default = main_head(), NOT the raw log head: see main_head()
@@ -503,6 +529,15 @@ class LakehouseTable:
         if v == 0:
             return []
         return self._read_manifest(v)["files"]
+
+    def _head_manifest(self) -> dict:
+        """The main head's manifest — ONE snapshot-log walk and read that
+        callers share between file list, stats and schema (review-pass
+        r15: the range-scan path walked the log three times per call)."""
+        v = self.main_head()
+        if v == 0:
+            raise ValueError(f"table {self.name} does not exist")
+        return self._read_manifest(v)
 
     def row_count(self, version: int | None = None) -> int:
         """Rows in a snapshot (default: main head), from metadata alone.
@@ -518,16 +553,11 @@ class LakehouseTable:
         """Files whose [min,max] for col intersects [lo,hi] — the scan
         set for a range predicate. Files without stats are kept (safe).
         Works on any handle: stats live in the manifest, not the class."""
-        head = self.main_head()
-        if head == 0:
-            raise ValueError(f"table {self.name} does not exist")
-        return self._pruned_files_in(self._read_manifest(head), col, lo, hi)
+        return self._pruned_files_in(self._head_manifest(), col, lo, hi)
 
     def _pruned_files_in(self, m: dict, col: str, lo, hi) -> list[str]:
-        """pruned_files against an ALREADY-READ head manifest — range
-        scans read the snapshot log once and share the manifest between
-        pruning, schema and the file scan (review-pass r15: the scan
-        path walked the log three times per call)."""
+        """pruned_files against an ALREADY-READ head manifest, which
+        range scans share with their schema and file scan."""
         # stats store timestamps as ISO strings; normalize TEMPORAL
         # bounds to the stats' 'T'-separated convention (ISO-8601
         # orders lexicographically only within one separator
@@ -595,16 +625,158 @@ class LakehouseTable:
                 out.append(f)
         return out
 
+    def read_range(self, col: str, lo, hi) -> DataFrame:
+        """Range scan using min/max skipping + the residual filter.
+
+        Datetime bounds are normalized to ISO strings cast to the
+        COLUMN's own type (r14 host-TZ sweep): a naive Python datetime
+        passed to Spark becomes a ZONED literal converted through the
+        driver process's LOCAL timezone, so comparing it against an
+        NTZ column shifted the range by the host's UTC offset."""
+        from pyspark.sql.types import StructType
+
+        m = self._head_manifest()
+        files = self._pruned_files_in(m, col, lo, hi)
+        if not files:
+            schema = StructType.fromJson(m["schema"])
+            return local_frame(self.spark, [], schema)
+        df = self._scan_files(files, m)
+
+        temporal_col = is_temporal_dtype(df.schema[col].dataType)
+
+        def bound(v):
+            # only TEMPORAL columns get the ISO normalization + cast;
+            # string/numeric bounds pass through verbatim (review-pass
+            # r14: a blanket separator replace corrupted string-column
+            # bounds)
+            if temporal_col:
+                iso_v = temporal_bound_iso(v)
+                if iso_v is not None:
+                    return F.lit(iso_v).cast(df.schema[col].dataType)
+            return F.lit(v)
+
+        return df.filter(
+            (F.col(col) >= bound(lo)) & (F.col(col) <= bound(hi))
+        )
+
+    def read_pruned(self, col: str, lo, hi, with_files: bool = False):
+        """Hidden-partition predicate rewrite (SURVEY §2.2 P3) — the
+        engine-side half of hidden partitioning: a range predicate on
+        the SOURCE column ``col`` is mapped to predicates on the derived
+        time-transform partition values encoded in the manifest's file
+        paths, and only matching files reach the scan. This is the
+        manifest filtering Iceberg's SparkScanBuilder performs; the user
+        never names the partition column.
+
+        Returns ``(df, files_scanned, files_total)`` so callers can
+        assert the pruning effect (files_scanned < files_total), not
+        just result correctness.  ``with_files=True`` returns the file
+        LISTS instead of counts — ``(df, kept_files, all_files)`` — so
+        callers can state partition-LEVEL contracts (the r14
+        multi-file fixture sweep showed file-count ratios are layout
+        noise: per-partition file counts scale with the writer's input
+        task count, so a ratio threshold tuned on single-file fixtures
+        broke on a 4-file input while the pruning itself was correct). Files whose path carries no time
+        transform of ``col`` (bucket/truncate transforms, or spec eras
+        from before partition evolution) are KEPT — safe over-read,
+        exactly how Iceberg handles partition-spec evolution. The
+        residual predicate is still applied, so correctness never
+        depends on pruning."""
+        from pyspark.sql.types import StructType
+
+        def iso(v) -> str:
+            # Canonicalize EVERY bound to 'YYYY-MM-DD HH:MM:SS...' — the
+            # trunc() slices below are positional, so a raw date-only or
+            # 'T'-separated string would truncate wrongly and silently
+            # prune files that contain matching rows.
+            out = temporal_bound_iso(v)
+            assert out is not None, (
+                f"non-temporal bound for time-transform pruning: {v!r}"
+            )
+            return out
+
+        def trunc(name: str, s: str) -> str:
+            # date_trunc's string form for each unit, derived from the
+            # ISO bound — lexicographic compare is then exact
+            if name == "years":
+                return s[:4] + "-01-01 00:00:00"
+            if name == "months":
+                return s[:7] + "-01 00:00:00"
+            if name == "days":
+                return s[:10] + " 00:00:00"
+            return s[:13] + ":00:00"  # hours
+
+        lo_iso, hi_iso = iso(lo), iso(hi)
+
+        def residual(frame: DataFrame) -> DataFrame:
+            # TEMPORAL columns compare the normalized ISO bounds CAST
+            # to the column's own dtype — the same treatment
+            # read_range.bound() applies (ADVICE r14): a naive Python
+            # datetime handed to Spark raw becomes a ZONED literal
+            # converted through the driver process's LOCAL timezone, so
+            # comparing it against an NTZ column would shift the range
+            # by the host's UTC offset.  A date-shaped STRING column
+            # (e.g. a truncate()-partitioned ISO-day column) compares
+            # the RAW bounds verbatim — padding them to '... 00:00:00'
+            # would over-filter its boundary rows lexicographically
+            # (review-pass r15, the same dtype gate as pruned_files).
+            dt = frame.schema[col].dataType
+            if is_temporal_dtype(dt):
+                lo_l, hi_l = F.lit(lo_iso).cast(dt), F.lit(hi_iso).cast(dt)
+            else:
+                lo_l, hi_l = F.lit(lo), F.lit(hi)
+            return frame.filter((F.col(col) >= lo_l) & (F.col(col) < hi_l))
+
+        m = self._head_manifest()
+        files = m["files"]
+        prefixes = {f"p_{n}_{col}": n for n in ("years", "months", "days", "hours")}
+        keep = []
+        for f in files:
+            verdict = None  # None = no transform of col on this path
+            for k, v in partition_segments(f):
+                if k in prefixes:
+                    n = prefixes[k]
+                    # partition value is the truncated period START; a
+                    # period overlaps [lo, hi] iff its start is within
+                    # [trunc(lo), trunc(hi)] (inclusive both ends).
+                    # AND across segments: a path carrying several time
+                    # transforms of col (e.g. days+hours) must satisfy
+                    # every one — each verdict alone is sound, so the
+                    # conjunction is the tightest sound prune.
+                    seg_ok = trunc(n, lo_iso) <= v <= trunc(n, hi_iso)
+                    verdict = seg_ok if verdict is None else (verdict and seg_ok)
+            if verdict is None or verdict:
+                keep.append(f)
+        schema = StructType.fromJson(m["schema"])
+        if not keep:
+            out = residual(local_frame(self.spark, [], schema))
+            return (out, [], list(files)) if with_files else (out, 0, len(files))
+        df = self._scan_files(sorted(keep), m)
+        out = residual(df)
+        if with_files:
+            return out, sorted(keep), list(files)
+        return out, len(keep), len(files)
+
     # ---------- S4/S5/S6: create / append / overwrite ----------
 
-    def create(self, df: DataFrame) -> int:
-        """CREATE TABLE AS SELECT (S5)."""
+    def create(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
+        """CREATE TABLE AS SELECT (S5). ``partition_by`` is Iceberg's
+        ``PARTITIONED BY`` (M7): transforms of source columns —
+        identity(c) | years/months/days/hours(c) | bucket(n, c) |
+        truncate(w, c), see :func:`partition_transform` — recorded as
+        the manifest's ``partition_spec``, which every later write
+        through any handle lays its files out by."""
         if self.current_version() != 0:
             raise ValueError(f"table {self.name} already exists")
-        files = self._write_files(df)
-        return self._commit(
-            {"files": files, "schema": df.schema.jsonValue(), "op": "create"}, 0
-        )
+        spec = list(partition_by or [])
+        manifest = {
+            "files": self._write_files(df, spec),
+            "schema": df.schema.jsonValue(),
+            "op": "create",
+        }
+        if spec:
+            manifest["partition_spec"] = spec
+        return self._commit(manifest, 0)
 
     def append(self, df: DataFrame) -> int:
         """INSERT INTO (S4): old files + new files, nothing rewritten.
@@ -671,11 +843,61 @@ class LakehouseTable:
         overwrite()'s schema replacement (review-pass r15)."""
         return self.overwrite(self._bind_positional(df))
 
+    def overwrite_partitions(self, df: DataFrame) -> int:
+        """Dynamic partition-level INSERT OVERWRITE (S6) — Iceberg's
+        ``overwritePartitions()`` / Spark's
+        ``spark.sql.sources.partitionOverwriteMode=dynamic``: only the
+        partitions that receive new rows are replaced; every other
+        partition's files survive into the new snapshot untouched.
+        (Contrast :meth:`overwrite`, the static S6 form that replaces
+        the whole table.)
+
+        The partition set being overwritten is computed from ``df``
+        under the CURRENT spec — one distinct partition tuple per
+        partition comes to the driver (bounded by partition count, never
+        row count; the data itself stays distributed). Files from
+        earlier spec eras whose paths don't carry the current spec's
+        derived columns are conservatively KEPT — after partition
+        evolution, run a full overwrite or compaction to rewrite old
+        eras (same caveat Iceberg documents for dynamic overwrite
+        across spec changes).
+        """
+        parent = self.current_version()
+        if parent == 0:
+            return self.create(df)
+        cols = [partition_transform(s) for s in self.partition_spec()]
+        names = [n for n, _ in cols]
+        touched = {
+            tuple(
+                "__HIVE_DEFAULT_PARTITION__" if r[n] is None else str(r[n])
+                for n in names
+            )
+            for r in df.withColumns(dict(cols)).select(*names).distinct().collect()
+        }
+
+        def file_partition(f: str):
+            vals = {}
+            for k, v in partition_segments(f):
+                if k in names:
+                    vals[k] = v
+            # missing derived column (older spec era) => tuple with None,
+            # which can never equal a touched tuple of strings => kept
+            return tuple(vals.get(n) for n in names)
+
+        keep = [f for f in self._files() if file_partition(f) not in touched]
+        new_files = self._write_files(df)
+        return self._commit(
+            {
+                "files": keep + new_files,
+                "schema": self.schema_json(),
+                "op": "overwrite_partitions",
+                "replaced_partitions": sorted("/".join(t) for t in touched),
+            },
+            parent,
+        )
+
     def schema_json(self) -> dict:
-        v = self.main_head()
-        if v == 0:
-            raise ValueError(f"table {self.name} does not exist")
-        return self._read_manifest(v)["schema"]
+        return self._head_manifest()["schema"]
 
     # ---------- S1/S8: scan + time travel ----------
 
@@ -686,8 +908,6 @@ class LakehouseTable:
         table metadata, as Iceberg does): no per-file schema inference,
         and files written before a column was added yield NULLs for it.
         """
-        from pyspark.sql.types import StructType
-
         v = version if version is not None else self.main_head()
         if v == 0:
             # contracted error, matching schema_json — the fall-through
@@ -704,11 +924,7 @@ class LakehouseTable:
                 f"table {self.name}: snapshot v{v} expired or never "
                 "existed"
             ) from None
-        files = self._files(v)
-        if not files:
-            schema = StructType.fromJson(m["schema"])
-            return local_frame(self.spark, [], schema)
-        return self._scan_files(files, m)
+        return self._read_file_set(m["files"], m)
 
     def _scan_files(self, files: list[str], manifest: dict) -> DataFrame:
         """Manifest-schema scan of ``files`` with Iceberg-v3 initial
@@ -850,6 +1066,16 @@ class LakehouseTable:
             "version int, parent int, operation string, n_files int, ts_ms long",
         )
 
+    def files(self) -> DataFrame:
+        """The `t.files` metadata relation: path + the file's stats
+        (record count, per-column min/max)."""
+        m = self._head_manifest()
+        rows = [
+            (f, json.dumps(m.get("stats", {}).get(f, {})))
+            for f in m["files"]
+        ]
+        return local_frame(self.spark, rows, "file_path string, stats_json string")
+
     # ---------- M2/M3: UPDATE / DELETE (copy-on-write, file-pruned) ----------
 
     def _affected_files(self, cond) -> list[str]:
@@ -859,7 +1085,7 @@ class LakehouseTable:
         if not cur:
             return []
         hits = (
-            self._scan_files(cur, self._read_manifest(self.main_head()))
+            self._scan_files(cur, self._head_manifest())
             .withColumn("__file", F.input_file_name())
             .filter(cond)
             .select("__file")
@@ -891,7 +1117,7 @@ class LakehouseTable:
         # filter would also drop NULL-predicate rows (NOT NULL => NULL,
         # filtered out). Keep rows where cond is FALSE *or* NULL.
         survivors = self._scan_files(
-            affected, self._read_manifest(self.main_head())
+            affected, self._head_manifest()
         ).filter(~F.coalesce(cond, F.lit(False)))
         new_files = self._write_files(survivors)
         return self._commit(
@@ -923,7 +1149,7 @@ class LakehouseTable:
         if not affected:
             return parent
         keep = [f for f in self._files() if f not in affected]
-        df = self._scan_files(affected, self._read_manifest(self.main_head()))
+        df = self._scan_files(affected, self._head_manifest())
         updated = df.select(
             *[
                 F.when(cond, assignments[c]).otherwise(F.col(c)).alias(c)
@@ -1003,10 +1229,7 @@ class LakehouseTable:
         )
 
         parent = self.current_version()
-        head = self.main_head()
-        if head == 0:
-            raise ValueError(f"table {self.name} does not exist")
-        m = self._read_manifest(head)
+        m = self._head_manifest()
         table_schema = StructType.fromJson(m["schema"])
         key_type = table_schema[on].dataType if on in table_schema.names else None
         # key types whose footer min/max order is Spark's equality order
@@ -1227,6 +1450,114 @@ class LakehouseTable:
             parent,
         )
 
+    def rewrite_sorted(self, col: str, target_files: int = 8) -> int:
+        """rewrite_data_files(strategy => 'sort', sort_order => col):
+        re-cluster the table so each file owns a disjoint range of
+        ``col`` — Iceberg's sort-based compaction. repartitionByRange
+        gives disjoint per-file ranges (range-partitioned shuffle, fully
+        distributed), sortWithinPartitions tightens row-group stats;
+        min/max pruning then hits ~1/target_files of the files for a
+        point/range predicate instead of all of them.
+        """
+        parent = self.current_version()
+        df = (
+            self.read()
+            .repartitionByRange(target_files, F.col(col))
+            .sortWithinPartitions(col)
+        )
+        new_files = self._write_files(df)
+        return self._commit(
+            {
+                "files": new_files,
+                "schema": self.schema_json(),
+                "op": f"rewrite_sorted:{col}",
+            },
+            parent,
+        )
+
+    def rewrite_zorder(
+        self, col_a: str, col_b: str, target_files: int = 8, bits: int = 16
+    ) -> int:
+        """rewrite_data_files(strategy => 'sort', sort_order =>
+        zorder(col_a, col_b)): multi-dimensional clustering — the same
+        operation Iceberg's z-order rewrite and Delta's OPTIMIZE ZORDER
+        perform. A 1-D sort (rewrite_sorted) gives perfect file pruning
+        on ONE column and none on any other; interleaving the bits of
+        both columns' rank positions (Morton code) orders rows along a
+        space-filling curve, so every file owns a compact rectangle in
+        (col_a, col_b) space and min/max pruning bites on EITHER column.
+
+        Normalization first (equal-width min/max → [0, 2^bits)):
+        z-values interleave fixed-width integers, so each dimension is
+        scaled into the same bit budget. min/max is ONE tiny aggregate
+        (4 numbers to the driver — fully distributed, unlike a
+        percent_rank global window, which would funnel the table
+        through a single partition); the interleave itself is a pure
+        bit expression (JVM codegen, no extra shuffle beyond the final
+        repartitionByRange). Heavily skewed value distributions get
+        uneven curve coverage under equal-width scaling — pre-transform
+        such a column (log, hash); ``bits`` is capped at 31 because the
+        interleaved z-value occupies 2*bits bits of a signed 64-bit
+        long, and a bit landing on the sign bit would sort those rows
+        before everything and break the curve.
+
+        At 100 TB this turns "2-D dashboard predicates scan the world"
+        into ~1/target_files of files per predicate dimension.
+        """
+        if not 1 <= bits <= 31:
+            raise ValueError(
+                f"bits must be in [1, 31] (the z-value is 2*bits bits of "
+                f"a signed 64-bit long), got {bits}"
+            )
+        parent = self.current_version()
+        df = self.read()
+        bounds = df.agg(
+            F.min(F.col(col_a).cast("double")).alias("a_lo"),
+            F.max(F.col(col_a).cast("double")).alias("a_hi"),
+            F.min(F.col(col_b).cast("double")).alias("b_lo"),
+            F.max(F.col(col_b).cast("double")).alias("b_hi"),
+        ).collect()[0]
+        if bounds["a_lo"] is None or bounds["b_lo"] is None:
+            raise ValueError(
+                f"rewrite_zorder({col_a!r}, {col_b!r}): no numeric values "
+                "to cluster on (empty table, or a column that is "
+                "non-numeric / all NULL after cast to double)"
+            )
+        max_v = (1 << bits) - 1
+
+        def norm(c: str, lo: float, hi: float):
+            span = (hi - lo) or 1.0
+            scaled = (F.col(c).cast("double") - F.lit(lo)) / F.lit(span)
+            return F.least(
+                F.lit(max_v).cast("long"),
+                F.floor(scaled * (max_v + 1)).cast("long"),
+            )
+
+        na = norm(col_a, bounds["a_lo"], bounds["a_hi"])
+        nb = norm(col_b, bounds["b_lo"], bounds["b_hi"])
+        z = F.lit(0).cast("long")
+        for i in range(bits):
+            z = z.bitwiseOR(
+                F.shiftleft(F.shiftright(na, i).bitwiseAND(F.lit(1)), 2 * i)
+            ).bitwiseOR(
+                F.shiftleft(F.shiftright(nb, i).bitwiseAND(F.lit(1)), 2 * i + 1)
+            )
+        zdf = (
+            df.withColumn("__z", z)
+            .repartitionByRange(target_files, F.col("__z"))
+            .sortWithinPartitions("__z")
+            .drop("__z")
+        )
+        new_files = self._write_files(zdf)
+        return self._commit(
+            {
+                "files": new_files,
+                "schema": self.schema_json(),
+                "op": f"rewrite_zorder:{col_a},{col_b}",
+            },
+            parent,
+        )
+
     def expire_snapshots(
         self, keep_last: int = 2, older_than_ms: int | None = None
     ) -> list[int]:
@@ -1426,7 +1757,28 @@ class LakehouseTable:
         The manifest records which files predate the column, so no data
         file is rewritten and compaction naturally graduates rows out of
         the default (rewritten files physically contain the column).
+
+        ``spark_type`` is a DDL type ('int', 'bigint', 'decimal(10,2)',
+        'array<string>', …), stored as its JSON name — the manifest
+        schema's encoding, which StructType.fromJson reads back ('int'
+        itself it rejects). A type that does not parse raises before
+        anything is committed.
         """
+        from pyspark.errors import ParseException
+        from pyspark.sql.types import DataType, StructType
+
+        try:
+            dtype = DataType.fromDDL(spark_type)
+        except ParseException:
+            dtype = None
+        # fromDDL reads a bare field list 'a int' as struct<a:int>
+        if dtype is None or (
+            isinstance(dtype, StructType)
+            and not spark_type.strip().lower().startswith("struct")
+        ):
+            raise ValueError(
+                f"{self.name}: add_column: unsupported type {spark_type!r}"
+            )
         parent = self.current_version()
         schema = self.schema_json()
         if any(f["name"] == name for f in schema["fields"]):
@@ -1437,7 +1789,12 @@ class LakehouseTable:
                 f"{self.name}: column {name!r} already exists"
             )
         schema["fields"].append(
-            {"name": name, "type": spark_type, "nullable": True, "metadata": {}}
+            {
+                "name": name,
+                "type": dtype.jsonValue(),
+                "nullable": True,
+                "metadata": {},
+            }
         )
         manifest: dict = {
             "files": self._files(),
@@ -1453,7 +1810,7 @@ class LakehouseTable:
         # type), so the default-less case now matches field-id reads.
         if parent:
             defaults = dict(
-                self._read_manifest(self.main_head()).get("defaults", {})
+                self._head_manifest().get("defaults", {})
             )
             defaults[name] = {
                 "value": default,
@@ -1462,15 +1819,11 @@ class LakehouseTable:
             manifest["defaults"] = defaults
         return self._commit(manifest, parent)
 
-    def read_evolved(self, version: int | None = None) -> DataFrame:
-        """Alias of read(): the manifest schema already governs scans."""
-        return self.read(version)
-
     def _guard_partition_source(self, op: str, col: str) -> None:
         """Evolving a column a partition transform reads would break
         every subsequent write's layout — refuse loudly (Iceberg makes
         you evolve the partition spec first)."""
-        for spec in getattr(self, "specs", []) or []:
+        for spec in self.partition_spec():
             if re.search(rf"\b{re.escape(col)}\b", spec):
                 raise ValueError(
                     f"{op}: column {col!r} is a partition source "
@@ -1494,7 +1847,7 @@ class LakehouseTable:
             "schema": schema,
             "op": f"drop_column:{name}",
         }
-        pm = self._read_manifest(self.main_head())
+        pm = self._head_manifest()
         defaults = {
             k: v for k, v in pm.get("defaults", {}).items() if k != name
         }
@@ -1527,7 +1880,7 @@ class LakehouseTable:
         for f in schema["fields"]:
             if f["name"] == old:
                 f["name"] = new
-        pm = self._read_manifest(self.main_head())
+        pm = self._head_manifest()
         renames = dict(pm.get("renames", {}))
         cur_files = self._files()
         # chain-safe: files already mapped to an even-older physical
@@ -1551,6 +1904,24 @@ class LakehouseTable:
                 (new if k == old else k): v for k, v in defaults.items()
             }
         return self._commit(manifest, parent)
+
+    def evolve_partitioning(self, new_specs: list[str]) -> int:
+        """Partition evolution (M7): future writes use the new spec; old
+        files keep their layout — exactly Iceberg's spec-versioning.
+        Manifest-only commit, no rewrite. An unknown transform raises
+        before anything is committed."""
+        parent = self.current_version()
+        for spec in new_specs:
+            partition_transform(spec)
+        return self._commit(
+            {
+                "files": self._files(),
+                "schema": self.schema_json(),
+                "op": f"evolve_partitioning:{','.join(new_specs)}",
+                "partition_spec": list(new_specs),
+            },
+            parent,
+        )
 
     # ---------- S8+: incremental scan / CDC changelog ----------
 
@@ -1720,6 +2091,13 @@ class LakehouseTable:
         return out
 
 
+#: Old name of the stats-collecting handle, kept as an alias because the
+#: benchmark harness (perfbench/run.py) wraps
+#: ``StatsLakehouseTable.__dict__["read_range"]`` by this name — which is
+#: why read_range lives in LakehouseTable's own class body.
+StatsLakehouseTable = LakehouseTable
+
+
 # ---------------------------------------------------------------------------
 # M7: hidden partitioning / partition transforms + evolution
 # M8: branches / tags / write-audit-publish
@@ -1854,277 +2232,6 @@ def partition_transform(spec: str) -> tuple[str, F.Column]:
         w, c = int(args[0]), args[1]
         return f"p_trunc_{c}", F.substring(F.col(c), 1, w)
     raise ValueError(f"unknown partition transform {spec!r}")
-
-
-class PartitionedLakehouseTable(LakehouseTable):
-    """LakehouseTable whose data files are laid out by partition
-    transforms (hive-style dirs of *derived* columns → Spark's scan
-    prunes directories when filters imply transform predicates)."""
-
-    def __init__(self, spark, warehouse, name, partition_specs: list[str]):
-        super().__init__(spark, warehouse, name)
-        self.specs = partition_specs
-
-    def _write_files(self, df: DataFrame) -> list[str]:
-        import uuid as _uuid
-
-        cols = [partition_transform(s) for s in self.specs]
-        out = os.path.join(self.data_dir, _uuid.uuid4().hex[:12])
-        (
-            df.withColumns({n: c for n, c in cols})
-            .write.mode("overwrite")
-            .partitionBy(*[n for n, _ in cols])
-            .parquet(out)
-        )
-        files = []
-        for root, _dirs, names in os.walk(out):
-            files.extend(
-                os.path.join(root, f) for f in names if f.endswith(".parquet")
-            )
-        return sorted(files)
-
-    def read(self, version: int | None = None) -> DataFrame:
-        """basePath option keeps partition-dir columns visible so Spark
-        prunes directories on transform predicates, then we drop the
-        derived columns — the 'hidden' in hidden partitioning.
-
-        Only the manifest's explicit file list is read, never the whole
-        batch directory: after inherited copy-on-write DML the directory
-        may still hold files the manifest no longer references (they are
-        reclaimed by expire_snapshots), and reading by directory would
-        resurrect their rows.
-        """
-        from pyspark.sql.types import StructType
-
-        v = version if version is not None else self.main_head()
-        if v == 0:
-            # clean contracted error, matching schema_json/read_pruned —
-            # falling through used to leak a raw FileNotFoundError for
-            # v00000.json (review-pass r15)
-            raise ValueError(f"table {self.name} does not exist")
-        try:
-            m = self._read_manifest(v)
-        except FileNotFoundError:
-            raise ValueError(
-                f"table {self.name}: snapshot v{v} expired or never "
-                "existed"
-            ) from None
-        schema_names = {f_json["name"] for f_json in m["schema"]["fields"]}
-        files = self._files(v)
-        if not files:
-            schema = StructType.fromJson(m["schema"])
-            return local_frame(self.spark, [], schema)
-        # One batch root per write (and per partition-spec era): each
-        # root is its own partitioned dataset with its own basePath —
-        # read each root's manifest files, strip derived p_* columns,
-        # union by name. The batch root is the first path component
-        # under data_dir (a uuid hex dir) — splitting the full path on
-        # '/p_' would truncate wrongly when the WAREHOUSE path itself
-        # contains that substring (review-pass r15).
-        by_root: dict[str, list[str]] = {}
-        for f in files:
-            rel = os.path.relpath(f, self.data_dir)
-            root = os.path.join(self.data_dir, rel.split(os.sep, 1)[0])
-            by_root.setdefault(root, []).append(f)
-        out = None
-        for root in sorted(by_root):
-            df = self.spark.read.option("basePath", root).parquet(
-                *sorted(by_root[root])
-            )
-            # drop only DERIVED partition columns: a p_-prefixed name
-            # that belongs to the manifest schema is a real user column
-            # (it used to be dropped and re-added as all-NULL —
-            # review-pass r15)
-            df = df.drop(
-                *[
-                    c
-                    for c in df.columns
-                    if c.startswith("p_") and c not in schema_names
-                ]
-            )
-            out = df if out is None else out.unionByName(
-                df, allowMissingColumns=True
-            )
-        # evolved columns absent from every physical file still need to
-        # exist before the defaults pass can fill them
-        for f_json in m["schema"]["fields"]:
-            if f_json["name"] not in out.columns:
-                out = out.withColumn(
-                    f_json["name"],
-                    F.lit(None).cast(f_json["type"]),
-                )
-        return self._apply_defaults(out, m, set(files))
-
-    def read_pruned(self, col: str, lo, hi, with_files: bool = False):
-        """Hidden-partition predicate rewrite (SURVEY §2.2 P3) — the
-        engine-side half of hidden partitioning: a range predicate on
-        the SOURCE column ``col`` is mapped to predicates on the derived
-        time-transform partition values encoded in the manifest's file
-        paths, and only matching files reach the scan. This is the
-        manifest filtering Iceberg's SparkScanBuilder performs; the user
-        never names the partition column.
-
-        Returns ``(df, files_scanned, files_total)`` so callers can
-        assert the pruning effect (files_scanned < files_total), not
-        just result correctness.  ``with_files=True`` returns the file
-        LISTS instead of counts — ``(df, kept_files, all_files)`` — so
-        callers can state partition-LEVEL contracts (the r14
-        multi-file fixture sweep showed file-count ratios are layout
-        noise: per-partition file counts scale with the writer's input
-        task count, so a ratio threshold tuned on single-file fixtures
-        broke on a 4-file input while the pruning itself was correct). Files whose path carries no time
-        transform of ``col`` (bucket/truncate transforms, or spec eras
-        from before partition evolution) are KEPT — safe over-read,
-        exactly how Iceberg handles partition-spec evolution. The
-        residual predicate is still applied, so correctness never
-        depends on pruning."""
-        from pyspark.sql.types import StructType
-
-        def iso(v) -> str:
-            # Canonicalize EVERY bound to 'YYYY-MM-DD HH:MM:SS...' — the
-            # trunc() slices below are positional, so a raw date-only or
-            # 'T'-separated string would truncate wrongly and silently
-            # prune files that contain matching rows.
-            out = temporal_bound_iso(v)
-            assert out is not None, (
-                f"non-temporal bound for time-transform pruning: {v!r}"
-            )
-            return out
-
-        def trunc(name: str, s: str) -> str:
-            # date_trunc's string form for each unit, derived from the
-            # ISO bound — lexicographic compare is then exact
-            if name == "years":
-                return s[:4] + "-01-01 00:00:00"
-            if name == "months":
-                return s[:7] + "-01 00:00:00"
-            if name == "days":
-                return s[:10] + " 00:00:00"
-            return s[:13] + ":00:00"  # hours
-
-        lo_iso, hi_iso = iso(lo), iso(hi)
-
-        def residual(frame: DataFrame) -> DataFrame:
-            # TEMPORAL columns compare the normalized ISO bounds CAST
-            # to the column's own dtype — the same treatment
-            # read_range.bound() applies (ADVICE r14): a naive Python
-            # datetime handed to Spark raw becomes a ZONED literal
-            # converted through the driver process's LOCAL timezone, so
-            # comparing it against an NTZ column would shift the range
-            # by the host's UTC offset.  A date-shaped STRING column
-            # (e.g. a truncate()-partitioned ISO-day column) compares
-            # the RAW bounds verbatim — padding them to '... 00:00:00'
-            # would over-filter its boundary rows lexicographically
-            # (review-pass r15, the same dtype gate as pruned_files).
-            dt = frame.schema[col].dataType
-            if is_temporal_dtype(dt):
-                lo_l, hi_l = F.lit(lo_iso).cast(dt), F.lit(hi_iso).cast(dt)
-            else:
-                lo_l, hi_l = F.lit(lo), F.lit(hi)
-            return frame.filter((F.col(col) >= lo_l) & (F.col(col) < hi_l))
-
-        # ONE snapshot-log walk + manifest read serves file list,
-        # schema and the scan (review-pass r15)
-        head = self.main_head()
-        if head == 0:
-            raise ValueError(f"table {self.name} does not exist")
-        m = self._read_manifest(head)
-        files = m["files"]
-        prefixes = {f"p_{n}_{col}": n for n in ("years", "months", "days", "hours")}
-        keep = []
-        for f in files:
-            verdict = None  # None = no transform of col on this path
-            for k, v in partition_segments(f):
-                if k in prefixes:
-                    n = prefixes[k]
-                    # partition value is the truncated period START; a
-                    # period overlaps [lo, hi] iff its start is within
-                    # [trunc(lo), trunc(hi)] (inclusive both ends).
-                    # AND across segments: a path carrying several time
-                    # transforms of col (e.g. days+hours) must satisfy
-                    # every one — each verdict alone is sound, so the
-                    # conjunction is the tightest sound prune.
-                    seg_ok = trunc(n, lo_iso) <= v <= trunc(n, hi_iso)
-                    verdict = seg_ok if verdict is None else (verdict and seg_ok)
-            if verdict is None or verdict:
-                keep.append(f)
-        schema = StructType.fromJson(m["schema"])
-        if not keep:
-            out = residual(local_frame(self.spark, [], schema))
-            return (out, [], list(files)) if with_files else (out, 0, len(files))
-        df = self._scan_files(sorted(keep), m)
-        out = residual(df)
-        if with_files:
-            return out, sorted(keep), list(files)
-        return out, len(keep), len(files)
-
-    def overwrite_partitions(self, df: DataFrame) -> int:
-        """Dynamic partition-level INSERT OVERWRITE (S6) — Iceberg's
-        ``overwritePartitions()`` / Spark's
-        ``spark.sql.sources.partitionOverwriteMode=dynamic``: only the
-        partitions that receive new rows are replaced; every other
-        partition's files survive into the new snapshot untouched.
-        (Contrast :meth:`LakehouseTable.overwrite`, the static S6 form
-        that replaces the whole table.)
-
-        The partition set being overwritten is computed from ``df``
-        under the CURRENT spec — one distinct partition tuple per
-        partition comes to the driver (bounded by partition count, never
-        row count; the data itself stays distributed). Files from
-        earlier spec eras whose paths don't carry the current spec's
-        derived columns are conservatively KEPT — after partition
-        evolution, run a full overwrite or compaction to rewrite old
-        eras (same caveat Iceberg documents for dynamic overwrite
-        across spec changes).
-        """
-        parent = self.current_version()
-        if parent == 0:
-            return self.create(df)
-        cols = [partition_transform(s) for s in self.specs]
-        names = [n for n, _ in cols]
-        touched = {
-            tuple(
-                "__HIVE_DEFAULT_PARTITION__" if r[n] is None else str(r[n])
-                for n in names
-            )
-            for r in df.withColumns(dict(cols)).select(*names).distinct().collect()
-        }
-
-        def file_partition(f: str):
-            vals = {}
-            for k, v in partition_segments(f):
-                if k in names:
-                    vals[k] = v
-            # missing derived column (older spec era) => tuple with None,
-            # which can never equal a touched tuple of strings => kept
-            return tuple(vals.get(n) for n in names)
-
-        keep = [f for f in self._files() if file_partition(f) not in touched]
-        new_files = self._write_files(df)
-        return self._commit(
-            {
-                "files": keep + new_files,
-                "schema": self.schema_json(),
-                "op": "overwrite_partitions",
-                "replaced_partitions": sorted("/".join(t) for t in touched),
-            },
-            parent,
-        )
-
-    def evolve_partitioning(self, new_specs: list[str]) -> int:
-        """Partition evolution (M7): future writes use the new spec; old
-        files keep their layout — exactly Iceberg's spec-versioning.
-        Manifest-only commit, no rewrite."""
-        parent = self.current_version()
-        self.specs = new_specs
-        return self._commit(
-            {
-                "files": self._files(),
-                "schema": self.schema_json(),
-                "op": f"evolve_partitioning:{','.join(new_specs)}",
-            },
-            parent,
-        )
 
 
 class BranchedLakehouse:
@@ -2441,6 +2548,7 @@ def _file_column_stats(path: str) -> dict:
     md = pq.ParquetFile(path).metadata
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
+    unreadable: set[str] = set()
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
@@ -2449,7 +2557,14 @@ def _file_column_stats(path: str) -> dict:
             if st is None or not st.has_min_max:
                 continue
             name = col.path_in_schema
-            lo, hi = st.min, st.max
+            try:
+                lo, hi = st.min, st.max
+            except NotImplementedError:
+                # pyarrow cannot decode some logical types' stats
+                # (decimals): the column gets no min/max, so no file is
+                # ever pruned on it
+                unreadable.add(name)
+                continue
             if isinstance(lo, bytes):
                 continue  # binary stats aren't comparable cross-engine
             if name not in mins or lo < mins[name]:
@@ -2481,16 +2596,16 @@ def _file_column_stats(path: str) -> dict:
 
     return {
         "record_count": md.num_rows,
-        "min": {k: enc(v) for k, v in mins.items()},
-        "max": {k: enc(v) for k, v in maxs.items()},
+        "min": {k: enc(v) for k, v in mins.items() if k not in unreadable},
+        "max": {k: enc(v) for k, v in maxs.items() if k not in unreadable},
     }
 
 
 def record_count(manifest: dict, files: list[str]) -> int:
     """Total rows of ``files`` from ``manifest``'s per-file
     ``record_count`` (Iceberg's manifest-entry field); only a file whose
-    entry lacks one (written by a stats-less handle, or before counts
-    were recorded) costs a parquet footer read."""
+    entry lacks one (a legacy manifest, written before every write
+    recorded counts) costs a parquet footer read."""
     import pyarrow.parquet as pq
 
     stats = manifest.get("stats", {})
@@ -2500,177 +2615,6 @@ def record_count(manifest: dict, files: list[str]) -> int:
         else pq.read_metadata(f).num_rows
         for f in files
     )
-
-
-class StatsLakehouseTable(LakehouseTable):
-    """LakehouseTable that collects per-file stats (record count, column
-    min/max) for every file it writes, so range scans and MERGE skip
-    files whose stats exclude the predicate — Iceberg's manifest
-    filtering, minus the cluster."""
-
-    def _write_files(self, df: DataFrame) -> list[str]:
-        files = super()._write_files(df)
-        self._pending_stats.update({f: _file_column_stats(f) for f in files})
-        return files
-
-    def files(self) -> DataFrame:
-        """The `t.files` metadata relation: path + the file's stats
-        (record count, per-column min/max)."""
-        import json as _json
-
-        m = self._read_manifest(self.main_head())
-        rows = [
-            (f, _json.dumps(m.get("stats", {}).get(f, {})))
-            for f in m["files"]
-        ]
-        return local_frame(self.spark, rows, "file_path string, stats_json string")
-
-    def rewrite_sorted(self, col: str, target_files: int = 8) -> int:
-        """rewrite_data_files(strategy => 'sort', sort_order => col):
-        re-cluster the table so each file owns a disjoint range of
-        ``col`` — Iceberg's sort-based compaction. repartitionByRange
-        gives disjoint per-file ranges (range-partitioned shuffle, fully
-        distributed), sortWithinPartitions tightens row-group stats;
-        min/max pruning then hits ~1/target_files of the files for a
-        point/range predicate instead of all of them.
-        """
-        parent = self.current_version()
-        df = (
-            self.read()
-            .repartitionByRange(target_files, F.col(col))
-            .sortWithinPartitions(col)
-        )
-        new_files = self._write_files(df)
-        return self._commit(
-            {
-                "files": new_files,
-                "schema": self.schema_json(),
-                "op": f"rewrite_sorted:{col}",
-            },
-            parent,
-        )
-
-    def rewrite_zorder(
-        self, col_a: str, col_b: str, target_files: int = 8, bits: int = 16
-    ) -> int:
-        """rewrite_data_files(strategy => 'sort', sort_order =>
-        zorder(col_a, col_b)): multi-dimensional clustering — the same
-        operation Iceberg's z-order rewrite and Delta's OPTIMIZE ZORDER
-        perform. A 1-D sort (rewrite_sorted) gives perfect file pruning
-        on ONE column and none on any other; interleaving the bits of
-        both columns' rank positions (Morton code) orders rows along a
-        space-filling curve, so every file owns a compact rectangle in
-        (col_a, col_b) space and min/max pruning bites on EITHER column.
-
-        Normalization first (equal-width min/max → [0, 2^bits)):
-        z-values interleave fixed-width integers, so each dimension is
-        scaled into the same bit budget. min/max is ONE tiny aggregate
-        (4 numbers to the driver — fully distributed, unlike a
-        percent_rank global window, which would funnel the table
-        through a single partition); the interleave itself is a pure
-        bit expression (JVM codegen, no extra shuffle beyond the final
-        repartitionByRange). Heavily skewed value distributions get
-        uneven curve coverage under equal-width scaling — pre-transform
-        such a column (log, hash); ``bits`` is capped at 31 because the
-        interleaved z-value occupies 2*bits bits of a signed 64-bit
-        long, and a bit landing on the sign bit would sort those rows
-        before everything and break the curve.
-
-        At 100 TB this turns "2-D dashboard predicates scan the world"
-        into ~1/target_files of files per predicate dimension.
-        """
-        if not 1 <= bits <= 31:
-            raise ValueError(
-                f"bits must be in [1, 31] (the z-value is 2*bits bits of "
-                f"a signed 64-bit long), got {bits}"
-            )
-        parent = self.current_version()
-        df = self.read()
-        bounds = df.agg(
-            F.min(F.col(col_a).cast("double")).alias("a_lo"),
-            F.max(F.col(col_a).cast("double")).alias("a_hi"),
-            F.min(F.col(col_b).cast("double")).alias("b_lo"),
-            F.max(F.col(col_b).cast("double")).alias("b_hi"),
-        ).collect()[0]
-        if bounds["a_lo"] is None or bounds["b_lo"] is None:
-            raise ValueError(
-                f"rewrite_zorder({col_a!r}, {col_b!r}): no numeric values "
-                "to cluster on (empty table, or a column that is "
-                "non-numeric / all NULL after cast to double)"
-            )
-        max_v = (1 << bits) - 1
-
-        def norm(c: str, lo: float, hi: float):
-            span = (hi - lo) or 1.0
-            scaled = (F.col(c).cast("double") - F.lit(lo)) / F.lit(span)
-            return F.least(
-                F.lit(max_v).cast("long"),
-                F.floor(scaled * (max_v + 1)).cast("long"),
-            )
-
-        na = norm(col_a, bounds["a_lo"], bounds["a_hi"])
-        nb = norm(col_b, bounds["b_lo"], bounds["b_hi"])
-        z = F.lit(0).cast("long")
-        for i in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(na, i).bitwiseAND(F.lit(1)), 2 * i)
-            ).bitwiseOR(
-                F.shiftleft(F.shiftright(nb, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-            )
-        zdf = (
-            df.withColumn("__z", z)
-            .repartitionByRange(target_files, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-        new_files = self._write_files(zdf)
-        return self._commit(
-            {
-                "files": new_files,
-                "schema": self.schema_json(),
-                "op": f"rewrite_zorder:{col_a},{col_b}",
-            },
-            parent,
-        )
-
-    def read_range(self, col: str, lo, hi) -> DataFrame:
-        """Range scan using min/max skipping + the residual filter.
-
-        Datetime bounds are normalized to ISO strings cast to the
-        COLUMN's own type (r14 host-TZ sweep): a naive Python datetime
-        passed to Spark becomes a ZONED literal converted through the
-        driver process's LOCAL timezone, so comparing it against an
-        NTZ column shifted the range by the host's UTC offset."""
-        from pyspark.sql.types import StructType
-
-        head = self.main_head()
-        if head == 0:
-            raise ValueError(f"table {self.name} does not exist")
-        # ONE snapshot-log walk + manifest read serves pruning, schema
-        # and the file scan (review-pass r15)
-        m = self._read_manifest(head)
-        files = self._pruned_files_in(m, col, lo, hi)
-        if not files:
-            schema = StructType.fromJson(m["schema"])
-            return local_frame(self.spark, [], schema)
-        df = self._scan_files(files, m)
-
-        temporal_col = is_temporal_dtype(df.schema[col].dataType)
-
-        def bound(v):
-            # only TEMPORAL columns get the ISO normalization + cast;
-            # string/numeric bounds pass through verbatim (review-pass
-            # r14: a blanket separator replace corrupted string-column
-            # bounds)
-            if temporal_col:
-                iso_v = temporal_bound_iso(v)
-                if iso_v is not None:
-                    return F.lit(iso_v).cast(df.schema[col].dataType)
-            return F.lit(v)
-
-        return df.filter(
-            (F.col(col) >= bound(lo)) & (F.col(col) <= bound(hi))
-        )
 
 
 def history(table: LakehouseTable) -> DataFrame:

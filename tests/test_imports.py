@@ -507,3 +507,20 @@ def test_bench_one_rejects_malformed_passes():
         assert p.returncode != 0, argv
         assert "--passes needs a positive integer" in p.stderr, p.stderr
         assert "Traceback" not in p.stderr, p.stderr
+
+
+def test_one_lakehouse_table_class():
+    """One table model: a table's features (partition spec, file stats)
+    come from its manifest, not from which class opened it. Every
+    package module is imported first, so a LakehouseTable subclass
+    anywhere in the package fails this."""
+    import importlib
+    import pkgutil
+
+    import dbx_workspace_and_emr_iceberg_spark as pkg
+    from dbx_workspace_and_emr_iceberg_spark.sources import lakehouse
+
+    for mod in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        importlib.import_module(mod.name)
+    assert lakehouse.LakehouseTable.__subclasses__() == []
+    assert lakehouse.StatsLakehouseTable is lakehouse.LakehouseTable

@@ -4,6 +4,8 @@ DML + unit coverage of the commit protocol)."""
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 import shutil
 import tempfile
@@ -122,11 +124,7 @@ def test_changelog_overwrite_is_full_diff(spark, wh):
 
 
 def test_rewrite_sorted_preserves_rows(spark, wh):
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
-
-    t = StatsLakehouseTable(spark, wh, "t")
+    t = LakehouseTable(spark, wh, "t")
     nat = load_table(spark, SF_DIR, "nation")
     t.create(nat.repartition(4, "n_name"))
     t.rewrite_sorted("n_nationkey", target_files=4)
@@ -181,15 +179,12 @@ def test_partitioned_read_honors_manifest_after_dml(spark, wh):
     """Copy-on-write DML on a partitioned table leaves stale files on
     disk until expiry; read() must follow the manifest file list, not
     the directory listing, or deleted rows resurrect."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
 
     ev = load_table(spark, SF_DIR, "events").select(
         "event_id", "ts", "user_id"
     ).filter(F.col("event_id") % 7 == 0)
-    t = PartitionedLakehouseTable(spark, wh, "ev", ["bucket(2, user_id)"])
-    t.create(ev)
+    t = LakehouseTable(spark, wh, "ev")
+    t.create(ev, partition_by=["bucket(2, user_id)"])
     n0 = t.read().count()
     doomed = t.read().filter(F.col("event_id") % 14 == 0).count()
     assert doomed > 0
@@ -249,9 +244,6 @@ def test_read_pruned_across_partition_evolution(spark, wh):
     its own path carries (days-era files by day, months-era files by
     month), and files carrying no time transform of the filter column
     are kept — the safe over-read Iceberg applies under spec evolution."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
 
     ev = (
         load_table(spark, SF_DIR, "events")
@@ -264,8 +256,8 @@ def test_read_pruned_across_partition_evolution(spark, wh):
     half_a = ev.filter(F.col("event_id") % 2 == 0)
     half_b = ev.filter(F.col("event_id") % 2 == 1)
 
-    t = PartitionedLakehouseTable(spark, wh, "ev_evo", ["days(ts)"])
-    t.create(half_a)
+    t = LakehouseTable(spark, wh, "ev_evo")
+    t.create(half_a, partition_by=["days(ts)"])
     t.evolve_partitioning(["months(ts)"])
     t.append(half_b)  # same time range, coarser layout
 
@@ -294,13 +286,10 @@ def test_read_pruned_keeps_untransformed_columns_safe(spark, wh):
     """A range filter on a column with NO time transform in the spec
     (bucket-only layout) must degrade to a full scan + residual filter,
     never a wrong prune."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
 
     ev = load_table(spark, SF_DIR, "events").select("event_id", "ts", "user_id")
-    t = PartitionedLakehouseTable(spark, wh, "ev_bkt", ["bucket(4, user_id)"])
-    t.create(ev)
+    t = LakehouseTable(spark, wh, "ev_bkt")
+    t.create(ev, partition_by=["bucket(4, user_id)"])
     lo, hi = "2024-01-11 00:00:00", "2024-01-12 00:00:00"
     got, n_scan, n_total = t.read_pruned("ts", lo, hi)
     assert n_scan == n_total, "bucket layout cannot prune a ts range"
@@ -315,9 +304,6 @@ def test_overwrite_partitions_replaces_only_touched(spark, wh):
     """S6 dynamic overwrite: only partitions present in the incoming
     frame are replaced; other partitions' files are carried into the
     new snapshot UNMODIFIED (same physical files, not rewritten)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
 
     ev = (
         load_table(spark, SF_DIR, "events")
@@ -327,8 +313,8 @@ def test_overwrite_partitions_replaces_only_touched(spark, wh):
             & (F.col("ts") < F.lit("2024-01-13 00:00:00").cast("timestamp"))
         )
     )
-    t = PartitionedLakehouseTable(spark, wh, "ev_dpo", ["days(ts)"])
-    t.create(ev)
+    t = LakehouseTable(spark, wh, "ev_dpo")
+    t.create(ev, partition_by=["days(ts)"])
     in_day = (F.col("ts") >= F.lit("2024-01-11 00:00:00").cast("timestamp")) & (
         F.col("ts") < F.lit("2024-01-12 00:00:00").cast("timestamp")
     )
@@ -345,12 +331,8 @@ def test_overwrite_partitions_replaces_only_touched(spark, wh):
 
 
 def test_overwrite_partitions_on_missing_table_creates(spark, wh):
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = load_table(spark, SF_DIR, "events").select("event_id", "ts", "user_id").limit(10)
-    t = PartitionedLakehouseTable(spark, wh, "ev_new", ["days(ts)"])
+    t = LakehouseTable(spark, wh, "ev_new")
     v = t.overwrite_partitions(ev)
     assert v == 1 and t.read().count() == 10
 
@@ -572,17 +554,13 @@ def test_changelog_cancels_rewrites_across_default_evolution(spark, tmp_path):
 def test_partitioned_table_applies_initial_default(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = (
         spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         .select("event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id")
         .filter("event_id < 200")
     )
-    t = PartitionedLakehouseTable(spark, str(tmp_path), "ev", ["days(ts)"])
-    t.create(ev.coalesce(1))
+    t = LakehouseTable(spark, str(tmp_path), "ev")
+    t.create(ev.coalesce(1), partition_by=["days(ts)"])
     t.add_column("source_tag", "string", default="legacy")
     t.append(
         ev.limit(5)
@@ -744,19 +722,19 @@ def test_rename_and_drop_column_manifest_only(spark, tmp_path):
 
 
 def test_rename_drop_partition_source_refused(spark, tmp_path):
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
         "event_id", "ts", "user_id"
     )
-    t = PartitionedLakehouseTable(spark, str(tmp_path), "ev", ["bucket(2, user_id)"])
-    t.create(ev)
-    with pytest.raises(ValueError, match="partition source"):
-        t.rename_column("user_id", "uid")
-    with pytest.raises(ValueError, match="partition source"):
-        t.drop_column("user_id")
+    wh = str(tmp_path)
+    t = LakehouseTable(spark, os.path.join(wh, "local", "default"), "ev")
+    t.create(ev, partition_by=["bucket(2, user_id)"])
+    # the spec is in the manifest, so the catalogs' handles refuse too
+    with _catalog_handles(spark, wh, "ev") as handles:
+        for h in [t, *handles]:
+            with pytest.raises(ValueError, match="partition source"):
+                h.rename_column("user_id", "uid")
+            with pytest.raises(ValueError, match="partition source"):
+                h.drop_column("user_id")
     # non-source columns still evolve fine
     t.rename_column("event_id", "eid")
     assert "eid" in t.read().columns
@@ -1201,13 +1179,10 @@ def test_temporal_bound_iso_contract():
 def _boundary_day_table(spark, wh, ddl: str, days):
     """Three files, one per day, via repartitionByRange on the day
     column — the exact-boundary pruning probe's fixture shape."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
 
     rows = [(d, i) for i, d in enumerate(days)]
     df = spark.createDataFrame(rows, ddl).repartitionByRange(3, "d")
-    t = StatsLakehouseTable(spark, wh, "bday")
+    t = LakehouseTable(spark, wh, "bday")
     t.create(df)
     return t
 
@@ -1258,16 +1233,15 @@ def test_read_pruned_residual_string_column_boundary(spark, wh):
     residual alone decides correctness."""
     import datetime
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     rows = [
         (datetime.datetime(2024, 1, d, 12), f"2024-01-{d:02d}", d)
         for d in (2, 5, 9)
     ]
-    t = PartitionedLakehouseTable(spark, wh, "sb", ["days(ts)"])
-    t.create(spark.createDataFrame(rows, "ts timestamp_ntz, d string, i long"))
+    t = LakehouseTable(spark, wh, "sb")
+    t.create(
+        spark.createDataFrame(rows, "ts timestamp_ntz, d string, i long"),
+        partition_by=["days(ts)"],
+    )
     out, kept, total = t.read_pruned("d", "2024-01-02", "2024-01-06")
     assert kept == total  # no transform of d: nothing prunable
     got = sorted(r.i for r in out.collect())
@@ -1393,16 +1367,15 @@ def test_partitioned_dml_hits_encoded_partition_dirs(spark, wh):
     (review-pass r15, reproduced)."""
     import datetime
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     rows = [
         (datetime.datetime(2024, 1, 1, 8, 0) + datetime.timedelta(days=i % 3), i)
         for i in range(10)
     ]
-    t = PartitionedLakehouseTable(spark, wh, "enc_dml", ["days(ts)"])
-    t.create(spark.createDataFrame(rows, "ts timestamp, i long"))
+    t = LakehouseTable(spark, wh, "enc_dml")
+    t.create(
+        spark.createDataFrame(rows, "ts timestamp, i long"),
+        partition_by=["days(ts)"],
+    )
     t.delete_where(F.col("i") == 3)
     assert t.read().count() == 9
     t.update_set(F.col("i") == 5, {"i": F.lit(500)})
@@ -1498,16 +1471,13 @@ def test_partitioned_read_keeps_user_p_prefixed_column(spark, wh):
     as all-NULL — review-pass r15)."""
     import datetime
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
-    t = PartitionedLakehouseTable(spark, wh, "pcol", ["days(ts)"])
+    t = LakehouseTable(spark, wh, "pcol")
     t.create(
         spark.createDataFrame(
             [(datetime.datetime(2024, 1, 1), 1, 0.5)],
             "ts timestamp, i long, p_score double",
-        )
+        ),
+        partition_by=["days(ts)"],
     )
     [row] = t.read().collect()
     assert row.p_score == 0.5
@@ -1515,36 +1485,30 @@ def test_partitioned_read_keeps_user_p_prefixed_column(spark, wh):
 
 
 def test_read_nonexistent_table_raises_cleanly(spark, wh):
-    """read() on a never-created table raises the contracted ValueError
+    """Scans of a never-created table raise the contracted ValueError
     (schema_json's rule), not a raw FileNotFoundError (partitioned) or
     a cryptic cannot-infer-schema (base) — review-pass r15."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        LakehouseTable,
-        PartitionedLakehouseTable,
-    )
-
     with pytest.raises(ValueError, match="does not exist"):
         LakehouseTable(spark, wh, "ghost").read()
     with pytest.raises(ValueError, match="does not exist"):
-        PartitionedLakehouseTable(spark, wh, "ghost2", ["days(ts)"]).read()
+        LakehouseTable(spark, wh, "ghost2").read_pruned(
+            "ts", "2024-01-01", "2024-01-02"
+        )
 
 
 def test_managed_reopens_with_stats_subclass(spark, wh):
     """A re-opened managed table (new Engine over an existing
-    warehouse) must come back as StatsLakehouseTable: the base class
-    crashed CALL rewrite_data_files' sort strategy (AttributeError)
-    and silently dropped the per-file min/max stats from subsequent
-    DML commits (review-pass r15)."""
+    warehouse) must serve CALL rewrite_data_files' sort strategy and
+    keep the per-file min/max stats through subsequent DML commits:
+    a stats-less handle class used to crash the first (AttributeError)
+    and silently drop the second (review-pass r15)."""
     from dbx_workspace_and_emr_iceberg_spark.engine import Engine
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
 
     e1 = Engine(spark, warehouse=wh)
     e1.create_table("reopen_t", spark.range(100).selectExpr("id AS c"))
     e2 = Engine(spark, warehouse=wh)  # fresh engine, same warehouse
     t = e2.managed("reopen_t")
-    assert isinstance(t, StatsLakehouseTable)
+    assert type(t) is LakehouseTable
     e2.sql(
         "CALL system.rewrite_data_files('reopen_t', strategy => 'sort', "
         "sort_order => 'c')"
@@ -1783,10 +1747,9 @@ def test_stats_survive_staged_branch_write(spark, tmp_path):
     reproduced)."""
     from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
         BranchedLakehouse,
-        StatsLakehouseTable,
     )
 
-    t = StatsLakehouseTable(spark, str(tmp_path), "t")
+    t = LakehouseTable(spark, str(tmp_path), "t")
     t.create(spark.range(0, 10).toDF("id").coalesce(1))
     t.append(spark.range(100, 200).toDF("id").coalesce(1))
     b = BranchedLakehouse(t)
@@ -1959,11 +1922,8 @@ def test_commit_lock_released_on_failure(wh):
 
 def _range_files_table(spark, wh, name="fm"):
     """A stats-carrying table of ids 0..299 in three key-disjoint files."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
 
-    t = StatsLakehouseTable(spark, wh, name)
+    t = LakehouseTable(spark, wh, name)
     t.create(
         spark.range(0, 300)
         .selectExpr("id AS k", "id * 10 AS v")
@@ -2052,12 +2012,10 @@ def test_pruning_ignores_stats_of_renamed_or_absent_columns(spark, wh):
     assert t.read_range("v", 7, 7).count() == 300
 
 
-def test_stats_survive_dml_through_every_handle(spark, wh):
-    """Regression: DML through a catalog handle (a plain LakehouseTable)
-    used to commit a manifest with no stats, and pruning then kept every
-    file forever. Kept files' stats must survive, so pruning still
-    prunes, through the LakehouseCatalog and the REST catalog alike."""
-    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+@contextlib.contextmanager
+def _catalog_handles(spark, wh, name):
+    """The handles LakehouseCatalog and the REST catalog return for
+    table ``name`` under ``<wh>/local/default``."""
     from dbx_workspace_and_emr_iceberg_spark.sources.catalog import (
         LakehouseCatalog,
     )
@@ -2066,6 +2024,24 @@ def test_stats_survive_dml_through_every_handle(spark, wh):
         RestCatalogServer,
         RestLakehouseCatalog,
     )
+
+    with RestCatalogServer(wh, catalog="local") as server:
+        yield [
+            LakehouseCatalog(spark, wh).table(name),
+            RestLakehouseCatalog(spark, RestCatalogClient(server.uri)).table(
+                f"default.{name}"
+            ),
+        ]
+
+
+def test_stats_survive_dml_through_every_handle(spark, wh):
+    """Regression: DML through a catalog handle (a plain LakehouseTable)
+    used to commit a manifest with no stats, and pruning then kept every
+    file forever. Kept files' stats must survive, so pruning still
+    prunes, through the LakehouseCatalog and the REST catalog alike —
+    and both handles serve the range scan, the files relation and the
+    sort rewrite, which used to exist only on the engine's handle."""
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
 
     eng = Engine(spark, warehouse=os.path.join(wh, "local", "default"))
     eng.create_table(
@@ -2084,13 +2060,7 @@ def test_stats_survive_dml_through_every_handle(spark, wh):
             assert after["stats"][f] == before["stats"][f]
         assert len(handle.pruned_files("k", 250, 260)) < len(after["files"])
 
-    with RestCatalogServer(wh, catalog="local") as server:
-        handles = [
-            LakehouseCatalog(spark, wh).table("orders"),
-            RestLakehouseCatalog(spark, RestCatalogClient(server.uri)).table(
-                "default.orders"
-            ),
-        ]
+    with _catalog_handles(spark, wh, "orders") as handles:
         for base, h in zip((1, 4), handles):
             assert type(h) is LakehouseTable
             before = h._read_manifest(h.main_head())
@@ -2104,7 +2074,68 @@ def test_stats_survive_dml_through_every_handle(spark, wh):
                 spark.createDataFrame([(base + 2, 0)], "k long, v long"), on="k"
             )
             assert_stats_kept(before, h)
+            assert h.read_range("k", 250, 259).count() == 10
+            files = h.files().collect()
+            assert [r.file_path for r in files] == h._files()
+            assert all(json.loads(r.stats_json)["record_count"] for r in files)
+            h.rewrite_data_files(strategy="sort", sort_order="k")
+            assert h._read_manifest(h.main_head())["op"] == "rewrite_sorted:k"
     assert eng.managed("orders").read().count() == 298
+
+
+def _day_rows(spark, day: int, ids):
+    import datetime
+
+    return spark.createDataFrame(
+        [(datetime.datetime(2024, 1, day, 8), i, f"s{i}", i * 0.5) for i in ids],
+        "ts timestamp, i long, s string, v double",
+    )
+
+
+def test_catalog_handle_append_follows_manifest_partition_spec(spark, wh):
+    """Regression: the partition spec lived on the handle's class, so an
+    append through a catalog handle wrote unpartitioned files without
+    stats into a days(ts) table. The spec is in the manifest: every
+    handle's append lands in its day's p_days_ts= dir, with stats."""
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        partition_segments,
+    )
+
+    t = LakehouseTable(spark, os.path.join(wh, "local", "default"), "pev")
+    t.create(_day_rows(spark, 1, range(3)), partition_by=["days(ts)"])
+    with _catalog_handles(spark, wh, "pev") as handles:
+        for day, h in zip((2, 3), handles):
+            h.append(_day_rows(spark, day, [10 * day]))
+            m = h._read_manifest(h.main_head())
+            days = {
+                f: dict(partition_segments(f)).get("p_days_ts") for f in m["files"]
+            }
+            new = [f for f, d in days.items() if d == f"2024-01-0{day} 00:00:00"]
+            assert new and all(f in m["stats"] for f in new)
+            assert None not in days.values()
+    assert t.partition_spec() == ["days(ts)"]
+    assert sorted(r.i for r in t.read().collect()) == [0, 1, 2, 20, 30]
+
+
+def test_partitioned_read_follows_manifest_schema(spark, wh):
+    """Regression: partitioned tables had a read of their own that took
+    each batch dir's file schema instead of the manifest's, so a dropped
+    column came back, and after a rename the old name came back while
+    the new one read all NULL. Every read now goes through the
+    manifest-schema scan."""
+    t = LakehouseTable(spark, wh, "pds")
+    t.create(
+        _day_rows(spark, 1, range(4)).union(_day_rows(spark, 2, range(4, 8))),
+        partition_by=["days(ts)"],
+    )
+    t.drop_column("v")
+    assert t.read().columns == ["ts", "i", "s"]
+    t.rename_column("s", "s2")
+    got = t.read()
+    assert got.columns == ["ts", "i", "s2"]
+    assert sorted((r.i, r.s2) for r in got.collect()) == [
+        (i, f"s{i}") for i in range(8)
+    ]
 
 
 def test_local_frame_type_parity(spark):

@@ -625,15 +625,11 @@ def test_merge_update_semantics_property(spark, tgt, src, mode, insert, multi_fi
     TARGET value); {} leaves matched rows untouched; the delete
     condition (src.a < 0) wins over update; unmatched source rows
     insert iff insert=True; target-only rows always survive.
-    ``multi_file`` range-partitions a stats-carrying target into up to
-    three files, so the file-scoped MERGE really prunes files against
+    ``multi_file`` range-partitions the target into up to three
+    files, so the file-scoped MERGE really prunes files against
     the same model."""
     import shutil as _shutil
     import tempfile as _tempfile
-
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
 
     wh = _tempfile.mkdtemp(prefix="merge_prop_")
     try:
@@ -641,12 +637,8 @@ def test_merge_update_semantics_property(spark, tgt, src, mode, insert, multi_fi
             [(k, a, b) for k, (a, b) in tgt.items()],
             "k long, a long, b long",
         )
-        if multi_file:
-            t = StatsLakehouseTable(spark, wh, "mp")
-            t.create(tgt_df.repartitionByRange(3, "k"))
-        else:
-            t = LakehouseTable(spark, wh, "mp")
-            t.create(tgt_df)
+        t = LakehouseTable(spark, wh, "mp")
+        t.create(tgt_df.repartitionByRange(3, "k") if multi_file else tgt_df)
         src_df = spark.createDataFrame(
             [(k, a, b) for k, (a, b) in src.items()],
             "k long, a long, b long",
@@ -1039,17 +1031,13 @@ def _range_scan_bound(kind, v, form):
 @given(range_scan_case())
 @SLOW
 def test_read_range_matches_bruteforce(spark, case):
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
-
     kind, idx, lo_i, hi_i, nfiles, form = case
     vals, ddl = _range_scan_pool(kind)
     rows = [(vals[j], i) for i, j in enumerate(idx)]
     wh = tempfile.mkdtemp(prefix="lh_prop_")
     try:
         df = spark.createDataFrame(rows, ddl).repartitionByRange(nfiles, "d")
-        t = StatsLakehouseTable(spark, wh, "t")
+        t = LakehouseTable(spark, wh, "t")
         t.create(df)
         lo = _range_scan_bound(kind, vals[lo_i], form)
         hi = _range_scan_bound(kind, vals[hi_i], form)
@@ -1086,10 +1074,6 @@ def test_read_pruned_matches_bruteforce(spark, case):
     no time transform of d and must degrade to full scan + residual."""
     import datetime
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     spec, idx, lo_i, hi_i, form = case
     vals = [
         datetime.datetime(2023, 12, 30, 20, 0, 0) + datetime.timedelta(hours=9 * i)
@@ -1098,8 +1082,10 @@ def test_read_pruned_matches_bruteforce(spark, case):
     rows = [(vals[j], i) for i, j in enumerate(idx)]
     wh = tempfile.mkdtemp(prefix="lh_prop_")
     try:
-        t = PartitionedLakehouseTable(spark, wh, "t", [spec])
-        t.create(spark.createDataFrame(rows, "d timestamp, i long"))
+        t = LakehouseTable(spark, wh, "t")
+        t.create(
+            spark.createDataFrame(rows, "d timestamp, i long"), partition_by=[spec]
+        )
         lo = vals[lo_i] if form == "obj" else vals[lo_i].isoformat(
             sep=" " if form == "iso" else "T"
         )

@@ -9,6 +9,7 @@ what must parse, into what, and what must be rejected loudly.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -595,6 +596,39 @@ def test_alter_table_door_evolution(spark, tmp_path):
     spark.catalog.dropTempView("alt_t")
 
 
+def test_alter_add_column_ddl_types(spark, tmp_path):
+    """Regression: ADD COLUMN stored the DDL spelling ('int') in the
+    manifest schema, which StructType.fromJson rejects, so every later
+    read of the table failed. DDL types are stored as their JSON names;
+    a type that does not parse raises and commits nothing."""
+    import decimal
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    t = eng.create_table("ddl_t", spark.range(2).selectExpr("id AS k"))
+    try:
+        for col, ddl in (("a", "int"), ("b", "bigint"), ("c", "decimal(10,2)")):
+            eng.sql(f"ALTER TABLE ddl_t ADD COLUMN {col} {ddl}")
+        eng.sql("INSERT INTO ddl_t VALUES (9, 1, 2, 3.25)")
+        got = eng.managed("ddl_t").read()
+        assert got.schema.simpleString() == (
+            "struct<k:bigint,a:int,b:bigint,c:decimal(10,2)>"
+        )
+        assert sorted(got.collect()) == [
+            (0, None, None, None),
+            (1, None, None, None),
+            (9, 1, 2, decimal.Decimal("3.25")),
+        ]
+        v = t.current_version()
+        for bad in ("notatype", "a int"):
+            with pytest.raises(ValueError, match="unsupported type"):
+                eng.sql(f"ALTER TABLE ddl_t ADD COLUMN d {bad}")
+        assert t.current_version() == v
+    finally:
+        spark.catalog.dropTempView("ddl_t")
+
+
 def test_ctas_and_insert_door(spark, tmp_path):
     """CREATE TABLE AS / INSERT INTO / INSERT OVERWRITE through the
     SQL door — the reference's spark-sql write flow (README.md:35-45)
@@ -1057,6 +1091,21 @@ def test_rewrite_leaves_backslash_escaped_literals_alone():
     assert sql_dml.rewrite_time_travel(object(), sql) == sql
 
 
+def _strip_manifest_stats(table) -> None:
+    """Turn ``table`` into a legacy table: drop the per-file ``stats``
+    (record counts, min/max) from every committed manifest, as written
+    before every write collected them."""
+    import glob
+    import json
+
+    for path in glob.glob(os.path.join(table.snap_dir, "v*.json")):
+        with open(path) as f:
+            m = json.load(f)
+        m.pop("stats", None)
+        with open(path, "w") as f:
+            json.dump(m, f, indent=1)
+
+
 def test_summary_n_rows_from_metadata_every_arm(spark, tmp_path):
     """n_rows comes from the manifest's per-file record counts, not a
     scan. For every SQL-door arm it must equal what a scan counts (the
@@ -1080,10 +1129,11 @@ def test_summary_n_rows_from_metadata_every_arm(spark, tmp_path):
         [(3, 100, 0), (39, 101, 0), (500, 102, 0), (None, 103, 0)],
         "k long, v2 long, w long",
     ).createOrReplaceTempView("nr_merge")
-    # no record counts in this table's manifests: a stats-less writer
-    LakehouseTable(spark, str(tmp_path), "nr_legacy").create(
-        spark.range(0, 25).selectExpr("id AS k", "id AS v").repartition(3)
-    )
+    # no record counts in this table's manifests: a legacy table
+    legacy = LakehouseTable(spark, str(tmp_path), "nr_legacy")
+    legacy.create(spark.range(0, 25).selectExpr("id AS k", "id AS v").repartition(3))
+    _strip_manifest_stats(legacy)
+    assert "stats" not in legacy._read_manifest(legacy.main_head())
 
     def summary(sql: str, group: str):
         out = eng.sql(sql)
